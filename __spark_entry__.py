@@ -823,7 +823,6 @@ def q_crawl_frontier_bucketed(spark, sf_dir):
             seeds,
             CrawlConfig(
                 corpus_pre_keyed=True,
-                dedupe_corpus=False,
                 broadcast_frontier=False,
             ),
         )

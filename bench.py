@@ -354,24 +354,8 @@ def run_wave(spark, sf_dir: str, scale_mult: int, body_repeat: int) -> dict:
     base = pagesrc.synth_clean_pages(spark, sf_dir, body_repeat=body_repeat)
     pages = _replicate(base, ["url", "html"], scale_mult)
     seeds = _replicate(spark.sql(pagesrc.seeds_sql()), ["url"], scale_mult)
-    cache_replicas = int(os.environ.get("SPARK_GRAFT_CACHE_REPLICAS", "1"))
-    # granularity dial for the barrier-straggler experiment (BENCH.md
-    # §3a): smaller cached partitions = finer task chains per superstep
-    # = smaller max-over-cores overhang at each barrier
-    part_target = int(os.environ.get("SPARK_GRAFT_PART_TARGET_MB", "64"))
-    part_cap = int(os.environ.get("SPARK_GRAFT_PART_CAP_MULT", "4"))
     t0 = time.time()
-    res = crawl(
-        spark,
-        pages,
-        seeds,
-        CrawlConfig(
-            force_path="slow",
-            cache_replicas=cache_replicas,
-            partition_target_mb=part_target,
-            partition_cap_mult=part_cap,
-        ),
-    )
+    res = crawl(spark, pages, seeds, CrawlConfig(force_path="slow"))
     wall = time.time() - t0
     fetched = sum(m["fetched"] for m in res.metrics)
     links = sum(m["links"] for m in res.metrics)
@@ -1229,6 +1213,12 @@ def run_scaling_final(sf_dir: str) -> dict:
             "N-value form is --scaling-cluster's)"
         )
     w_lo, w_hi = workers
+    if not w_lo < w_hi:
+        raise ValueError(
+            "--scaling-final needs SPARK_GRAFT_CLUSTER_WORKERS=lo,hi with "
+            f"lo < hi (got {w_lo},{w_hi}): the efficiency ratio and the "
+            "pinned driver slice both assume the second size is larger"
+        )
     full_warm_hi = int(os.environ.get("SPARK_GRAFT_WARMUP_WAVES", "2"))
     pin_cpus = os.environ.get("SPARK_GRAFT_PIN_CPUS", "") == "1"
     tmp = tempfile.mkdtemp(prefix="scaling-final-")

@@ -102,7 +102,6 @@ def main(argv=None) -> int:
         respect_robots=args.respect_robots,
         use_bloom=args.use_bloom,
         corpus_pre_keyed=args.corpus_pre_keyed,
-        dedupe_corpus=not args.corpus_pre_keyed,
         broadcast_frontier=not args.no_broadcast_frontier,
     )
     host_ranks = (

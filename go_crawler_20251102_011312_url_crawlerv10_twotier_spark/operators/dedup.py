@@ -138,36 +138,41 @@ def _bit_test(packed_u8: np.ndarray, pos: np.ndarray) -> np.ndarray:
     return ((packed_u8[pos >> 3] >> (7 - (pos & 7)).astype(np.uint8)) & 1).astype(bool)
 
 
-def bloom_probe_shards(
+def broadcast_bloom_shards(shards: DataFrame):
+    """Collect a shard table (see build_bloom_shards) into a broadcast
+    variable of {shard: packed uint8 bitset} for bloom_probe_broadcast.
+    The caller owns it: ``destroy()`` it once every frame that probes
+    it has been materialized."""
+    packed = {
+        int(r["shard"]): np.frombuffer(r["bloom"], dtype=np.uint8)
+        for r in shards.collect()
+    }
+    return shards.sparkSession.sparkContext.broadcast(packed)
+
+
+def bloom_probe_broadcast(
     candidates: DataFrame,
-    shards: DataFrame,
+    bc,
     key: str = "url_norm",
     n_shards: int = 64,
     bits_per_shard: int = 1 << 20,
     n_hashes: int = 5,
 ):
-    """Probe a pre-built shard table (see build_bloom_shards).
+    """Probe a broadcast shard table (see broadcast_bloom_shards).
 
-    The shard table is collected (n_shards rows, ~n_shards x bits/8
-    bytes — 8 MB at the defaults) and shipped to executors as a REAL
-    broadcast variable read inside the pandas UDF. It must NOT be
-    broadcast-JOINED onto the candidates: a join materializes the
-    full per-shard blob on EVERY candidate row, which at 2M
-    candidates x 128 KB blobs is ~256 GB through the Arrow boundary
-    (measured as a multi-minute GC collapse). Probing indexes the
-    packed bytes directly — no million-bit unpack per batch either.
+    The packed bytes ship to executors as a REAL broadcast variable
+    read inside the pandas UDF. They must NOT be broadcast-JOINED onto
+    the candidates: a join materializes the full per-shard blob on
+    EVERY candidate row, which at 2M candidates x 128 KB blobs is
+    ~256 GB through the Arrow boundary (measured as a multi-minute GC
+    collapse). Probing indexes the packed bytes directly — no
+    million-bit unpack per batch either.
 
     A candidate whose shard is absent is definitely new (that shard
     holds no keys yet) — relevant for incrementally-built tables.
 
     Returns (definitely_new, maybe_seen).
     """
-    spark = candidates.sparkSession
-    packed = {
-        int(r["shard"]): np.frombuffer(r["bloom"], dtype=np.uint8)
-        for r in shards.collect()
-    }
-    bc = spark.sparkContext.broadcast(packed)
     m = bits_per_shard
     k = n_hashes
     ns = n_shards
@@ -193,6 +198,29 @@ def bloom_probe_shards(
     definitely_new = probed.filter(~F.col("_maybe")).drop("_maybe")
     maybe_seen = probed.filter(F.col("_maybe")).drop("_maybe")
     return definitely_new, maybe_seen
+
+
+def bloom_probe_shards(
+    candidates: DataFrame,
+    shards: DataFrame,
+    key: str = "url_norm",
+    n_shards: int = 64,
+    bits_per_shard: int = 1 << 20,
+    n_hashes: int = 5,
+):
+    """Probe a pre-built shard table (see build_bloom_shards): the
+    table is collected (n_shards rows, ~n_shards x bits/8 bytes — 8 MB
+    at the defaults) and broadcast for bloom_probe_broadcast. The
+    broadcast lives as long as the returned frames may run; a loop
+    that probes once per step should use broadcast_bloom_shards and
+    destroy each one itself.
+
+    Returns (definitely_new, maybe_seen).
+    """
+    return bloom_probe_broadcast(
+        candidates, broadcast_bloom_shards(shards), key, n_shards,
+        bits_per_shard, n_hashes,
+    )
 
 
 def merge_bloom_shards(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -297,17 +297,6 @@ def extract_links_fast(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
-@F.pandas_udf(SLOW_RESULT_TYPE)
-def extract_slow(html: pd.Series, base_url: pd.Series) -> pd.DataFrame:
-    rows = [
-        analyze_slow_py(h, u)
-        if h is not None and u is not None
-        else analyze_slow_py(b"", "")
-        for h, u in zip(html, base_url)
-    ]
-    return pd.DataFrame(rows)
-
-
 _EMPTY_SLOW = {
     "urls": None,
     "docs": None,
@@ -329,17 +318,6 @@ def extract_routed_py(html, base_url: str, path: str) -> dict:
     out["urls"] = urls
     out["link_count"] = len(urls)
     return out
-
-
-@F.pandas_udf(SLOW_RESULT_TYPE)
-def extract_routed(html: pd.Series, base_url: pd.Series, path: pd.Series) -> pd.DataFrame:
-    rows = [
-        extract_routed_py(h, u, p)
-        if h is not None and u is not None
-        else dict(_EMPTY_SLOW)
-        for h, u, p in zip(html, base_url, path)
-    ]
-    return pd.DataFrame(rows)
 
 
 def link_density_col(link_count, html):
@@ -367,16 +345,15 @@ def extract_stage(pages: DataFrame, url_col: str = "url", html_col: str = "html"
     of per-tier Arrow batch homogeneity. Row-level dispatch inside one
     pass costs one string compare per row.
 
-    mapInPandas, NOT the scalar ``extract_routed`` UDF: html is a WIDE
-    column (KB typical, 5 MB cap tail) and ArrowEvalPython's join-back
-    row queue holds every ORIGINAL routed row — html included — on the
-    JVM heap up to the full execution pool before spilling; each
-    superstep of the 1 M-page crawl rode the 8 g heap at 99 % old gen
-    through exactly this queue. MapInPandas streams batch-in/batch-out
+    mapInPandas, NOT a scalar pandas UDF: html is a WIDE column (KB
+    typical, 5 MB cap tail) and ArrowEvalPython's join-back row queue
+    holds every ORIGINAL routed row — html included — on the JVM heap
+    up to the full execution pool before spilling; each superstep of
+    the 1 M-page crawl rode the 8 g heap at 99 % old gen through
+    exactly this queue. MapInPandas streams batch-in/batch-out
     (byte-bounded by spark.sql.execution.arrow.maxBytesPerBatch), so
     html bytes cross to python once and never enter a JVM-side queue.
-    Per-row dispatch (extract_routed_py) is shared with the scalar UDF
-    — identical values by construction.
+    Per-row dispatch is extract_routed_py.
     """
     keep_fields = [f for f in pages.schema.fields if f.name != html_col]
     keep_names = [f.name for f in keep_fields]

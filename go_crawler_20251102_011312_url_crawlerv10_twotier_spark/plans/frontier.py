@@ -84,7 +84,6 @@ class CrawlConfig:
     # host_ranks to activate rank-aware ordering (north_rule priority
     # queue: crawl-depth + host-rank)
     global_budget: int | None = None
-    max_body_bytes: int = MAX_BODY_SIZE  # crawler_twotier.go:57
     max_retries: int = MAX_RETRIES  # config/config.go:34
     checkpoint_dir: str | None = None
     politeness_salts: int = 16
@@ -106,31 +105,12 @@ class CrawlConfig:
     # check can't see what the k-th superstep's carriers look like).
     # None (default) costs nothing.
     plan_hook: "object | None" = None
-    # cache the prepared corpus across iterations (the reference's
-    # response cache, O11). Right for iterative crawls; set False for
-    # single-superstep runs where each page is read exactly once and
-    # the cache build/spill is pure overhead.
-    cache_corpus: bool = True
-    # replica count for the corpus cache blocks. 1 = plain
-    # MEMORY_AND_DISK. 2 doubles the odds that a free task slot holds
-    # a local copy of the partition it needs — on a multi-executor
-    # cluster the per-superstep join otherwise pays locality waits or
-    # remote fetches of multi-GB html whenever the cache landed
-    # unevenly (measured bimodal 4.2K vs 7.2K pages/s waves at 4x4
-    # executors, BENCH.md §3a row d). Costs 2x cache storage + one
-    # extra network copy at build time. Measured on THIS box (BENCH.md
-    # §3a row e): no win — a "remote" replica fetch between co-located
-    # executor JVMs crosses the same memory bus as the miss it avoids,
-    # so better placement odds don't convert to throughput here. The
-    # lever only pays where replicas live behind independent NICs/
-    # buses (a real cluster); at 100 TB apply it to the hot working
-    # tier, not the whole corpus. Default stays 1.
-    cache_replicas: int = 1
-    # StorageLevel NAME for the corpus cache (cache_replicas must be 1
-    # to use a non-default level). MEMORY_AND_DISK (default) is right
-    # while aggregate executor memory is a useful fraction of the
-    # corpus; DISK_ONLY is the honest level once the corpus dwarfs the
-    # heap — html bytes then never sit deserialized in executor memory,
+    # StorageLevel NAME for the corpus cache (the corpus is always
+    # cached across iterations — the reference's response cache, O11).
+    # MEMORY_AND_DISK (default) is right while aggregate executor
+    # memory is a useful fraction of the corpus; DISK_ONLY is the
+    # honest level once the corpus dwarfs the heap — html bytes then
+    # never sit deserialized in executor memory,
     # and the cache becomes exactly the reference's on-disk response
     # cache (crawler_twotier.go cacheDir, O11): built once, re-read per
     # superstep at sequential-scan cost. (The 1 M-page rehearsal's
@@ -152,13 +132,6 @@ class CrawlConfig:
     # build: 34 s at 1024 vs 42 s default — smaller transients also
     # GC cheaper). Set alongside DISK_ONLY for huge-body corpora.
     cache_batch_rows: int | None = None
-    # hash-repartition + dropDuplicates the corpus on url_norm during
-    # prep. Needed when the input may carry duplicate URLs; set False
-    # when the pages table is already unique per url (an ingest-time
-    # invariant any production Iceberg pages table should hold) — the
-    # full-corpus shuffle it saves is the single largest data movement
-    # in the job.
-    dedupe_corpus: bool = True
     # the pages table is already keyed (url_norm, html) — normalized,
     # body-capped, unique — e.g. a bucketed corpus table written by
     # sources.bucketed.write_bucketed_corpus. The crawl then joins on
@@ -166,7 +139,8 @@ class CrawlConfig:
     # no-op — idempotence is property-pinned) would wrap the bucket
     # column in an expression and destroy the scan's hash
     # outputPartitioning, forcing the corpus exchange the bucketing
-    # exists to eliminate. Pair with dedupe_corpus=False.
+    # exists to eliminate. Without it the corpus is hash-repartitioned
+    # and deduplicated on url_norm during prep.
     corpus_pre_keyed: bool = False
     # enforce robots.txt rules found in the corpus (operators/robots).
     # Default False: the REFERENCE ignores robots (IgnoreRobotsTxt,
@@ -183,8 +157,6 @@ class CrawlConfig:
     # host with Crawl-delay d gets max(1, floor(window/d)) slots per
     # iteration (operators/robots.delay_budgets). None = ignore delays.
     crawl_delay_window_s: float | None = None
-    # bound for hosts declaring tiny delays (None = budget_per_host-free)
-    crawl_delay_budget_cap: int | None = None
     # route the J1 seen probe through the sharded-Bloom prefilter
     # (north_rule O4): definitely-new candidates skip the anti-join
     # shuffle entirely; maybes (incl. false positives) fall through to
@@ -205,31 +177,6 @@ class CrawlConfig:
     # seed set, pass explicit sizing for the EXPECTED final size.
     bloom_shards: int | None = None
     bloom_bits_per_shard: int | None = None
-    # the cuckoo alternative (north_rule names both families —
-    # operators/cuckoo.py): same exactness contract as use_bloom,
-    # maintained per superstep by INCREMENTAL INSERTS into the
-    # standing shard tables (update_cuckoo_shards touches only the
-    # delta's shards); pick it over Bloom when the seen set must also
-    # FORGET (recrawl invalidation deletes fingerprints in place).
-    # Mutually exclusive with use_bloom. Shard count None = auto from
-    # the initial seen count; like the Bloom sizing, pass an explicit
-    # value sized for the EXPECTED final seen set on a growing crawl
-    # (per-shard load grows with inserts; n_stash on the shard rows
-    # audits saturation).
-    use_cuckoo: bool = False
-    cuckoo_shards_n: int | None = None
-    # corpus cache granularity dial: target bytes per prepared-corpus
-    # partition and the partition-count cap as a multiple of total
-    # cores. Defaults are the measured local-mode sweet spot (64 MB,
-    # 4x — see _prepare_pages). On barrier-synchronized superstep
-    # runs the cap doubles as the STRAGGLER dial: each superstep
-    # waits for the slowest core's task chain, and with K tasks per
-    # core per stage the expected overhang of that max shrinks ~1/K —
-    # so multi-executor waves (where the barrier tail, not per-task
-    # overhead, binds — BENCH.md §3a) can raise the cap / lower the
-    # target to trade per-task overhead for balance.
-    partition_target_mb: int = 64
-    partition_cap_mult: int = 4
     # retain only the last K committed snapshots (None = retain all):
     # after each commit the loop runs the store's expire_snapshots —
     # the Iceberg table-maintenance analogue — so the checkpoint
@@ -253,22 +200,18 @@ def _prepare_pages(
     pages: DataFrame,
     url_col: str,
     html_col: str,
-    dedupe: bool = True,
     pre_keyed: bool = False,
-    target_mb: int = 64,
-    cap_mult: int = 4,
 ) -> DataFrame:
     """Key the corpus by the compat-normalized URL and pre-truncate
     bodies to the 5 MB cap (a scan-side projection, done once).
 
-    With ``dedupe``, the shuffle hash-partitions the corpus on
-    url_norm, and the cached frame keeps that outputPartitioning — so
-    every per-iteration fetch join reuses it and only exchanges the
-    (small) frontier side; the heavy html bytes are shuffled exactly
-    once per crawl, not once per iteration. Without it (pre-unique
-    input), the corpus is never shuffled at all — pair with
-    broadcast_frontier or a bucketed table so the join needs no
-    corpus-side exchange.
+    The dedup shuffle hash-partitions the corpus on url_norm, and the
+    cached frame keeps that outputPartitioning — so every
+    per-iteration fetch join reuses it and only exchanges the (small)
+    frontier side; the heavy html bytes are shuffled exactly once per
+    crawl, not once per iteration. A ``pre_keyed`` (bucketed, unique)
+    corpus is never shuffled at all — its scan already carries the
+    partitioning the join needs.
     """
     if pre_keyed:
         # bucketed/pre-keyed corpus: url_norm is the stored bucket
@@ -279,8 +222,6 @@ def _prepare_pages(
         _norm(F.col(url_col)).alias("url_norm"),
         F.substring(F.col(html_col), 1, MAX_BODY_SIZE).alias("html"),
     )
-    if not dedupe:
-        return proj
     # Partition count sized by DATA, not cores (the thing that carries
     # to 100 TB): ~64 MB target per partition from Catalyst's stats
     # estimate (free — no job), floored at the core count so big
@@ -306,7 +247,7 @@ def _prepare_pages(
         )
     except Exception:  # stats unavailable (e.g. local relation edge) — cores rule
         est_bytes = 0
-    n = min(max(par, est_bytes // (target_mb << 20) + 1), cap_mult * par)
+    n = min(max(par, est_bytes // (64 << 20) + 1), 4 * par)
     return proj.repartition(n, "url_norm").dropDuplicates(["url_norm"])
 
 
@@ -372,45 +313,31 @@ def crawl(
     cfg = cfg or CrawlConfig()
     store = SnapshotStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
-    corpus = _prepare_pages(
-        pages,
-        url_col,
-        html_col,
-        dedupe=cfg.dedupe_corpus,
-        pre_keyed=cfg.corpus_pre_keyed,
-        target_mb=cfg.partition_target_mb,
-        cap_mult=cfg.partition_cap_mult,
+    corpus = _prepare_pages(pages, url_col, html_col, pre_keyed=cfg.corpus_pre_keyed)
+    batch_conf = "spark.sql.inMemoryColumnarStorage.batchSize"
+    saved_batch = (
+        spark.conf.get(batch_conf, None)
+        if cfg.cache_batch_rows is not None
+        else None
     )
-    if cfg.cache_corpus:
-        level = (
-            getattr(StorageLevel, cfg.cache_storage_level)
-            if cfg.cache_replicas <= 1
-            else StorageLevel(True, True, False, False, cfg.cache_replicas)
-        )
-        batch_conf = "spark.sql.inMemoryColumnarStorage.batchSize"
-        saved_batch = (
-            spark.conf.get(batch_conf, None)
-            if cfg.cache_batch_rows is not None
-            else None
-        )
+    if cfg.cache_batch_rows is not None:
+        # batchSize is read when the InMemoryRelation is planned
+        # (persist below), so set-before/restore-after scopes it to
+        # this cache only
+        spark.conf.set(batch_conf, str(cfg.cache_batch_rows))
+    try:
+        corpus = corpus.persist(getattr(StorageLevel, cfg.cache_storage_level))
+        # materialize the cache NOW, in one deterministic job —
+        # otherwise the first iteration's join (or worse, an AQE
+        # broadcast-stage building a plan below the cache node)
+        # re-runs the corpus prep per branch
+        corpus.count()
+    finally:
         if cfg.cache_batch_rows is not None:
-            # batchSize is read when the InMemoryRelation is planned
-            # (persist below), so set-before/restore-after scopes it to
-            # this cache only
-            spark.conf.set(batch_conf, str(cfg.cache_batch_rows))
-        try:
-            corpus = corpus.persist(level)
-            # materialize the cache NOW, in one deterministic job —
-            # otherwise the first iteration's join (or worse, an AQE
-            # broadcast-stage building a plan below the cache node)
-            # re-runs the corpus prep per branch
-            corpus.count()
-        finally:
-            if cfg.cache_batch_rows is not None:
-                if saved_batch is None:
-                    spark.conf.unset(batch_conf)
-                else:
-                    spark.conf.set(batch_conf, saved_batch)
+            if saved_batch is None:
+                spark.conf.unset(batch_conf)
+            else:
+                spark.conf.set(batch_conf, saved_batch)
 
     robots_df = None
     host_budgets = None
@@ -428,9 +355,7 @@ def crawl(
             # scheduling window (operators/robots.delay_budgets); hosts
             # without a delay keep cfg.budget_per_host
             host_budgets = delay_budgets(
-                host_crawl_delays(corpus),
-                cfg.crawl_delay_window_s,
-                cap=cfg.crawl_delay_budget_cap,
+                host_crawl_delays(corpus), cfg.crawl_delay_window_s
             ).localCheckpoint(eager=True)
 
     # S2 redirect transparency (colly/net/http follow 3xx silently; the
@@ -521,19 +446,6 @@ def crawl(
             bloom_bits = bloom_bits if bloom_bits is not None else auto_bits
         bloom_shards = dedup_ops.build_bloom_shards(
             seen, "url_norm", bloom_ns, bloom_bits
-        ).localCheckpoint(eager=True)
-    cuckoo_state = None
-    cuckoo_ns = 0
-    if cfg.use_cuckoo:
-        if cfg.use_bloom:
-            raise ValueError("use_bloom and use_cuckoo are mutually exclusive")
-        from ..operators import cuckoo as cuckoo_ops
-
-        cuckoo_ns = cfg.cuckoo_shards_n or cuckoo_ops.resolve_cuckoo_shards(
-            seen.count()
-        )
-        cuckoo_state = cuckoo_ops.build_cuckoo_shards(
-            seen, "url_norm", cuckoo_ns
         ).localCheckpoint(eager=True)
 
     if store and start_iter == 0:
@@ -648,24 +560,16 @@ def crawl(
         # J1: the crawl-seen anti-join (crawler_twotier.go:195,224-245),
         # optionally behind the sharded-Bloom prefilter (O4): probe-False
         # rows skip the shuffle, probe-True rows get the exact join.
+        bloom_bc = None
         if bloom_shards is not None:
             # materialize the candidates once: the def_new/maybe union
             # downstream has two branches, and without this cut each
             # would recompute the whole extract lineage (measured 2x
             # the per-iteration cost at fixture scale)
             deduped = deduped.localCheckpoint(eager=True)
-            def_new, maybe = dedup_ops.bloom_probe_shards(
-                deduped, bloom_shards, "url_norm", bloom_ns, bloom_bits,
-            )
-            new = def_new.unionByName(
-                maybe.join(seen.select("url_norm"), "url_norm", "left_anti")
-            )
-        elif cuckoo_state is not None:
-            from ..operators import cuckoo as cuckoo_ops
-
-            deduped = deduped.localCheckpoint(eager=True)  # same two-branch cut
-            def_new, maybe = cuckoo_ops.cuckoo_probe_shards(
-                deduped, cuckoo_state, "url_norm", cuckoo_ns
+            bloom_bc = dedup_ops.broadcast_bloom_shards(bloom_shards)
+            def_new, maybe = dedup_ops.bloom_probe_broadcast(
+                deduped, bloom_bc, "url_norm", bloom_ns, bloom_bits,
             )
             new = def_new.unionByName(
                 maybe.join(seen.select("url_norm"), "url_norm", "left_anti")
@@ -687,6 +591,11 @@ def crawl(
             .localCheckpoint(eager=True)
         )
         n_new = int(new_obs.get["n"])
+        if bloom_bc is not None:
+            # new is checkpointed, so no later job reads the probe: free
+            # the shard copy on the driver, the executors and the
+            # python workers now instead of at some future GC
+            bloom_bc.destroy()
         t_extract = time.time()
 
         keys = ("pages", "links", "docs", "fast_cnt", "slow_cnt")
@@ -754,13 +663,6 @@ def crawl(
                 dedup_ops.build_bloom_shards(
                     seen_delta, "url_norm", bloom_ns, bloom_bits
                 ),
-            ).localCheckpoint(eager=True)
-        if cuckoo_state is not None:
-            from ..operators import cuckoo as cuckoo_ops
-
-            # incremental inserts — only the delta's shards do work
-            cuckoo_state = cuckoo_ops.update_cuckoo_shards(
-                cuckoo_state, additions=seen_delta, key="url_norm", n_shards=cuckoo_ns
             ).localCheckpoint(eager=True)
         if deferred is None:
             frontier = new
@@ -842,8 +744,7 @@ def crawl(
     # mark still-pending downloads (queue drain state, C6)
     downloads = download_log.finalize_download_log(dl_log, dl_pending, it)
 
-    if cfg.cache_corpus:
-        corpus.unpersist()
+    corpus.unpersist()
     return CrawlResult(seen=seen, downloads=downloads, metrics=metrics, iterations=it)
 
 

@@ -18,7 +18,7 @@ destroy the scan's outputPartitioning; ``CrawlConfig.corpus_pre_keyed``
 tells the crawl to join on the stored column as-is), bodies are
 pre-capped at the 5 MB tier-1 bound, and rows are unique per
 ``url_norm`` (deduped at write inside the bucket shuffle, so the crawl
-can also set ``dedupe_corpus=False``).
+skips its own corpus dedup).
 
 The writer repartitions by ``url_norm`` into exactly ``n_buckets``
 tasks before ``bucketBy`` — repartition and bucketing use the same
@@ -80,8 +80,8 @@ def write_bucketed_corpus(
 def read_bucketed_corpus(spark: SparkSession, name: str) -> DataFrame:
     """Read a corpus written by :func:`write_bucketed_corpus`. Pass the
     result to ``crawl(..., CrawlConfig(corpus_pre_keyed=True,
-    dedupe_corpus=False, broadcast_frontier=False))`` for the
-    zero-corpus-exchange sort-merge fetch join (broadcast_frontier=True
-    also works and ignores the bucketing — right when one iteration's
-    scheduled batch fits in memory)."""
+    broadcast_frontier=False))`` for the zero-corpus-exchange
+    sort-merge fetch join (broadcast_frontier=True also works and
+    ignores the bucketing — right when one iteration's scheduled batch
+    fits in memory)."""
     return spark.table(name)

@@ -1,3 +1,4 @@
+import os
 import sys
 from pathlib import Path
 
@@ -12,7 +13,10 @@ SF_SMALL = "/root/testdata/sf0.001"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(app_name="tests", cores=8)
+    # $SPARK_GRAFT_CPUS (the tier-1 command sets it to the machine's
+    # core count) wins over the fixed 8: local[8] on a 4-core box runs
+    # every small job with twice the tasks and slots it has cores for
+    s = get_spark(app_name="tests", cores=os.environ.get("SPARK_GRAFT_CPUS", 8))
     yield s
 
 

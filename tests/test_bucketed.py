@@ -68,7 +68,6 @@ def test_fetch_join_zero_corpus_exchange(spark, corpus_table):
         bucketed.read_bucketed_corpus(spark, corpus_table),
         "url",
         "html",
-        dedupe=False,
         pre_keyed=True,
     )
     sched = spark.createDataFrame([(SEED,)], "url_norm string")
@@ -101,7 +100,6 @@ def test_bucketed_crawl_same_result(spark, corpus_table):
             seeds,
             CrawlConfig(
                 corpus_pre_keyed=True,
-                dedupe_corpus=False,
                 broadcast_frontier=False,
             ),
         )

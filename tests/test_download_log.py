@@ -34,7 +34,11 @@ def _run(spark, discoveries, corpus_urls, n_iters, max_retries):
         delta, pending = dl.advance_download_state(
             new, pending, log, keys, it, max_retries
         )
-        log = log.unionByName(delta)
+        # checkpoint both, as the operator's contract asks of its caller
+        # (the crawl loop does the same): without the cut each step's
+        # plan holds two copies of the last one, so it doubles per step
+        log = log.unionByName(delta).localCheckpoint(eager=True)
+        pending = pending.localCheckpoint(eager=True)
     return dl.finalize_download_log(log, pending, n_iters - 1)
 
 
