@@ -70,10 +70,14 @@ class SnapshotStore:
     ) -> None:
         seen_delta.write.mode("overwrite").parquet(f"{self.root}/seen/iter={it}")
         frontier.write.mode("overwrite").parquet(f"{self.root}/frontier/iter={it}")
+        dl_dir = f"{self.root}/downloads/iter={it}"
         if downloads_delta is not None:
-            downloads_delta.write.mode("overwrite").parquet(
-                f"{self.root}/downloads/iter={it}"
-            )
+            downloads_delta.write.mode("overwrite").parquet(dl_dir)
+        elif os.path.isdir(dl_dir):
+            # a superstep without a delta must not inherit one from an
+            # abandoned timeline (a time-travel resume re-running iter
+            # K): merged_downloads unions every downloads/iter<=K dir
+            shutil.rmtree(dl_dir)
         if downloads_pending is not None:
             downloads_pending.write.mode("overwrite").parquet(
                 f"{self.root}/pending/iter={it}"

@@ -41,8 +41,11 @@ Scale notes (100 TB / 10^10 frontier):
   session.py; explicit per-shard blooms live in operators/dedup.py).
 * lineage is truncated every iteration (localCheckpoint) or committed
   durably through plans/checkpoint.SnapshotStore for resume.
-* per-partition metrics rows (north_rule lineage) are collected per
-  iteration from spark_partition_id() of the extract stage.
+* each superstep's extract output is materialized once, as a narrow
+  checkpoint (depth, path, links, doc urls, partition id); candidates,
+  the download branch and the superstep totals all read it. With a
+  snapshot store, its per-partition aggregates (north_rule lineage)
+  are written as ``metrics/iter=K``.
 """
 
 from __future__ import annotations
@@ -249,6 +252,19 @@ def _prepare_pages(
         est_bytes = 0
     n = min(max(par, est_bytes // (64 << 20) + 1), 4 * par)
     return proj.repartition(n, "url_norm").dropDuplicates(["url_norm"])
+
+
+def _stat_aggs() -> list:
+    """The five per-superstep extract figures over the narrow extract
+    frame: totals through ``observe`` and, per partition, the store's
+    ``metrics`` rows."""
+    return [
+        F.count(F.lit(1)).alias("pages"),
+        F.sum(F.size(F.coalesce("links", F.array()))).alias("links"),
+        F.sum(F.size(F.coalesce("docs", F.array()))).alias("docs"),
+        F.sum(F.when(F.col("path") == "fast", 1).otherwise(0)).alias("fast_cnt"),
+        F.sum(F.when(F.col("path") == "slow", 1).otherwise(0)).alias("slow_cnt"),
+    ]
 
 
 def _physical_str(df: DataFrame) -> str:
@@ -489,37 +505,35 @@ def crawl(
         if cfg.plan_hook is not None:
             cfg.plan_hook(it, "fetch_join", _physical_str(hits))
 
-        # O1 route + E1/E2 extract, one pass, per-partition metrics
+        # O1 route on the body's BYTE length (the reference's Decide
+        # gets len(body) of a []byte) + E1/E2 extract in one pass
         path_col = (
             F.lit(cfg.force_path)
             if cfg.force_path
-            else route_decision_col(F.col("url"), F.length("html"))
+            else route_decision_col(F.col("url"), F.octet_length("html"))
         )
         routed = hits.withColumn("path", path_col)
         # extract_stage consumes html inside its mapInPandas hop and
         # never emits it — html bytes cross to python once and exist in
-        # no downstream plan node or JVM-side UDF queue
-        ext = extract_stage(routed, url_col="url", html_col="html").withColumn(
-            "partition_id", F.spark_partition_id()
-        )
-        # without a snapshot store, totals ride along the extract action
-        # via observe() — no separate metrics job per iteration; with a
-        # store, the per-partition lineage rows need a real aggregation.
-        # ext is deliberately NOT persisted: building the columnar cache
-        # for its nested output (array<struct> docs) costs ~10x more
-        # than recomputing the whole extract lineage on the rare second
-        # consumer (the docs branch / store metrics), so recompute wins.
-        obs = None
-        if store is None:
-            obs = Observation(f"iter{it}")
-            ext = ext.observe(
-                obs,
-                F.count(F.lit(1)).alias("pages"),
-                F.sum(F.size(F.coalesce("links", F.array()))).alias("links"),
-                F.sum(F.size(F.coalesce("docs", F.array()))).alias("docs"),
-                F.sum(F.when(F.col("path") == "fast", 1).otherwise(0)).alias("fast_cnt"),
-                F.sum(F.when(F.col("path") == "slow", 1).otherwise(0)).alias("slow_cnt"),
+        # no downstream plan node or JVM-side UDF queue. Its output is
+        # materialized once, narrowed to what the candidates, the
+        # download branch and the stats read, so the fetch join and the
+        # python extract run exactly once per superstep; the totals ride
+        # the checkpoint action as an observation.
+        obs = Observation(f"iter{it}")
+        ext = (
+            extract_stage(routed, url_col="url", html_col="html")
+            .select(
+                "depth",
+                "path",
+                "links",
+                F.col("docs.url").alias("docs"),
+                F.spark_partition_id().alias("partition_id"),
             )
+            .observe(obs, *_stat_aggs())
+            .localCheckpoint(eager=True)
+        )
+        tot = {k: int(v or 0) for k, v in obs.get.items()}
 
         # F1 (parent depth) -> explode -> P1 normalize -> F2 -> batch dedup
         cand = (
@@ -562,11 +576,6 @@ def crawl(
         # rows skip the shuffle, probe-True rows get the exact join.
         bloom_bc = None
         if bloom_shards is not None:
-            # materialize the candidates once: the def_new/maybe union
-            # downstream has two branches, and without this cut each
-            # would recompute the whole extract lineage (measured 2x
-            # the per-iteration cost at fixture scale)
-            deduped = deduped.localCheckpoint(eager=True)
             bloom_bc = dedup_ops.broadcast_bloom_shards(bloom_shards)
             def_new, maybe = dedup_ops.bloom_probe_broadcast(
                 deduped, bloom_bc, "url_norm", bloom_ns, bloom_bits,
@@ -598,40 +607,12 @@ def crawl(
             bloom_bc.destroy()
         t_extract = time.time()
 
-        keys = ("pages", "links", "docs", "fast_cnt", "slow_cnt")
-        if obs is not None:
-            got = obs.get  # filled by the checkpoint action above
-            stats_rows = []
-            tot = {k: int(got[k] or 0) for k in keys}
-        else:
-            # per-partition metrics (north_rule lineage): one extra
-            # aggregation that recomputes the (cheap) extract lineage
-            part_stats = (
-                ext.groupBy("partition_id")
-                .agg(
-                    F.count("*").alias("pages"),
-                    F.sum(F.size(F.coalesce("links", F.array()))).alias("links"),
-                    F.sum(F.size(F.coalesce("docs", F.array()))).alias("docs"),
-                    F.sum(F.when(F.col("path") == "fast", 1).otherwise(0)).alias("fast_cnt"),
-                    F.sum(F.when(F.col("path") == "slow", 1).otherwise(0)).alias("slow_cnt"),
-                )
-                .withColumn("iter", F.lit(it))
-            )
-            stats_rows = part_stats.collect()
-            tot = {
-                k: int(sum(r[k] or 0 for r in stats_rows))
-                for k in keys
-            }
-        t_stats = time.time()
-
         # J2 + C5: download-state machine, retries as data.
         # Skipped entirely when this iteration produced no docs and no
         # retries are pending — the common case on link-only strata.
         dl_delta = None
         if tot["docs"] > 0 or n_pending_dl > 0:
-            new_docs = ext.select(F.explode("docs").alias("d")).select(
-                F.col("d.url").alias("url")
-            )
+            new_docs = ext.select(F.explode("docs").alias("url"))
             delta, next_pending = download_log.advance_download_state(
                 new_docs,
                 dl_pending,
@@ -691,26 +672,15 @@ def crawl(
                 "wall_s": round(time.time() - t0, 3),
                 "t_sched": round(t_sched - t0, 3),
                 "t_extract": round(t_extract - t_sched, 3),
-                "t_stats": round(t_stats - t_extract, 3),
-                "t_state": round(time.time() - t_stats, 3),
+                # the totals ride the extract checkpoint: no stats phase
+                "t_stats": 0.0,
+                "t_state": round(time.time() - t_extract, 3),
             }
         )
         if store:
-            met_df = spark.createDataFrame(
-                [
-                    (
-                        it,
-                        int(r["partition_id"]),
-                        int(r["pages"]),
-                        int(r["links"] or 0),
-                        int(r["docs"] or 0),
-                        int(r["fast_cnt"]),
-                        int(r["slow_cnt"]),
-                    )
-                    for r in stats_rows
-                ],
-                "iter int, partition_id int, pages long, links long, docs long,"
-                " fast_cnt long, slow_cnt long",
+            met_df = ext.groupBy("partition_id").agg(*_stat_aggs()).select(
+                F.lit(it).alias("iter"), "partition_id", "pages", "links",
+                "docs", "fast_cnt", "slow_cnt",
             )
             store.write_iter(
                 it, seen_delta, frontier, dl_delta, met_df,

@@ -61,7 +61,9 @@ def reference_crawl(
             if html is None:
                 continue  # fetch miss (reference OnError path)
             body = html[:MAX_BODY_SIZE]  # colly MaxBodySize truncation
-            path = route_decide_py(raw, len(body))
+            # Decide gets len(body) of a []byte: route on the byte size
+            n_bytes = len(body.encode("utf-8") if isinstance(body, str) else body)
+            path = route_decide_py(raw, n_bytes)
             if path == "fast":
                 links = extract_links_fast_py(
                     body.encode() if isinstance(body, str) else body, raw

@@ -80,6 +80,34 @@ def test_budget_enforced_per_iteration(budgeted):
     assert all(m["scheduled"] <= 3 for m in budgeted["metrics"])  # single host
 
 
+METRICS_SCHEMA = (
+    "struct<iter:int,partition_id:int,pages:bigint,links:bigint,docs:bigint,"
+    "fast_cnt:bigint,slow_cnt:bigint>"
+)
+
+
+def assert_store_metrics_match(spark, ck, metrics):
+    """Each committed superstep's per-partition lineage rows
+    (metrics/iter=K) have one row per partition, the store schema, and
+    sum to the superstep's totals in CrawlResult.metrics."""
+    for m in metrics:
+        k = m["iter"]
+        df = spark.read.parquet(f"{ck}/metrics/iter={k}")
+        assert df.schema.simpleString() == METRICS_SCHEMA, k
+        rows = df.collect()
+        pids = [r.partition_id for r in rows]
+        assert len(pids) == len(set(pids)), k
+        assert {r.iter for r in rows} <= {k}
+        for col, key in (
+            ("pages", "fetched"),
+            ("links", "links"),
+            ("docs", "docs"),
+            ("fast_cnt", "fast_cnt"),
+            ("slow_cnt", "slow_cnt"),
+        ):
+            assert sum(r[col] for r in rows) == m[key], (k, col)
+
+
 def test_resume_identical(spark, full):
     with tempfile.TemporaryDirectory() as ck:
         partial = run_engine(spark, CrawlConfig(max_iterations=2, checkpoint_dir=ck))
@@ -91,6 +119,9 @@ def test_resume_identical(spark, full):
         got_dl = sorted(
             (r.url, r.status, r.retry) for r in res.downloads.collect()
         )
+        committed = partial.metrics + res.metrics
+        assert [m["iter"] for m in committed] == list(range(1, res.iterations + 1))
+        assert_store_metrics_match(spark, ck, committed)
     assert got == full["seen"]
     # downloads state (J2/J3/C5) resumes exactly too: closed entries
     # come back from the merged snapshot deltas, in-flight retries from
@@ -128,6 +159,21 @@ def test_metrics_shape(full):
     assert m1["fast_cnt"] + m1["slow_cnt"] == m1["fetched"]
     total_new = sum(m["new_urls"] for m in full["metrics"])
     assert total_new == full["n_seen"] - 1  # all but the seed
+
+
+def test_route_on_bytes_not_characters(spark):
+    """O1 compares the body's BYTE length to the reference's thresholds
+    (Decide gets len(body) of a []byte): 60 K two-byte characters are
+    under 100 KiB as characters but over it as bytes, so a keyword-free
+    four-segment path routes slow."""
+    url = "https://bytes.example/a/b/c/d"
+    html = "<html><body>" + "\u00e9" * 60_000 + "</body></html>"
+    assert len(html) < 100 * 1024 < len(html.encode("utf-8"))
+    pages = spark.createDataFrame([(url, html)], "url string, html string")
+    seeds = spark.createDataFrame([(url, 0)], "url string, depth int")
+    res = crawl(spark, pages, seeds, CrawlConfig(max_iterations=1))
+    (m,) = res.metrics
+    assert (m["fetched"], m["fast_cnt"], m["slow_cnt"]) == (1, 0, 1)
 
 
 def test_bloom_crawl_identical(spark, full):

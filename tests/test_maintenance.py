@@ -137,3 +137,24 @@ def test_snapshot_keep_bounds_store_in_the_loop(spark, ck_run, tmp_path):
     # a plain resume (latest snapshot) still lands on the same state
     res2 = resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck))
     assert _state(res2) == final
+
+
+def test_rewritten_iter_drops_stale_downloads_delta(spark, tmp_path):
+    """Re-committing superstep K without a downloads delta (a
+    time-travel resume whose new timeline closes nothing at K) must
+    not leave the abandoned timeline's downloads/iter=K visible."""
+    store = SnapshotStore(str(tmp_path))
+    seen = spark.createDataFrame(
+        [(SEED, SEED, "quirk.example", 0, 0)],
+        "url_norm string, url string, host string, depth int, iter int",
+    )
+    frontier = seen.select("url", "url_norm", "host", "depth")
+    df = spark.createDataFrame(
+        [("https://quirk.example/a.pdf", "failed", 4, 1)],
+        "url string, status string, retry int, iter int",
+    )
+    store.write_iter(1, seen, frontier, downloads_delta=df)
+    store.write_iter(1, seen, frontier, downloads_delta=None)
+    merged = store.merged_downloads(spark, 1)
+    got = set() if merged is None else set(merged.collect())
+    assert not got & set(df.collect())
