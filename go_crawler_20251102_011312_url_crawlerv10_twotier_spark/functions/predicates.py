@@ -32,11 +32,22 @@ def host_present(host) -> Column:
     return host.isNotNull() & (host != "")
 
 
-def body_size_ok(html) -> Column:
-    """F3: 5 MB body cap (crawler_twotier.go:57). Applied as a length
-    predicate so the scan can skip oversized rows via column stats."""
+def body_cap(html) -> Column:
+    """F3: colly's MaxBodySize reads at most 5 MB of the body
+    (crawler_twotier.go:57). ``html`` is a decoded string, so the cap
+    counts its UTF-8 bytes, not characters: the body is cut at
+    MAX_BODY_SIZE - k bytes for the smallest k in 0..3 that does not
+    split a code point (``try_validate_utf8`` is NULL on a split one,
+    where ``decode`` would raise). Pure Catalyst."""
     html = F.col(html) if isinstance(html, str) else html
-    return F.length(html) <= F.lit(MAX_BODY_SIZE)
+    raw = F.encode(html, "UTF-8")
+    cut = F.coalesce(
+        *(
+            F.try_validate_utf8(F.substring(raw, 1, MAX_BODY_SIZE - k).cast("string"))
+            for k in range(4)
+        )
+    )
+    return F.when(F.octet_length(html) > MAX_BODY_SIZE, cut).otherwise(html)
 
 
 def status_200(status) -> Column:

@@ -4,58 +4,104 @@ with per-partition lineage + metrics).
 The reference's only persistence is three append-only text files
 written by racing goroutines (crawler_twotier.go:237-244,
 downloader.go:302-310) — unordered and unusable for resume. Here each
-iteration commits an atomic snapshot:
+iteration K commits an Iceberg-style snapshot
+(https://iceberg.apache.org/spec/): its tables go to new, never
+overwritten dirs ``<dir>/<table>/<K>-<uuid>/`` — ``seen`` (new URLs of
+K), ``frontier`` (entering K+1), ``downloads`` (download-state delta),
+``pending`` (retry queue), ``metrics`` (per-partition fetch metrics) —
+and one atomic replace of the manifest ``<dir>/_meta.json`` commits
+them: ``{"iter": K, "horizon": h, "snaps": {K: {table: dir}}}``.
 
-    <dir>/seen/iter=K/*.parquet        (append-only: new URLs of iter K)
-    <dir>/frontier/iter=K/*.parquet    (full frontier entering iter K+1)
-    <dir>/downloads/iter=K/*.parquet   (download-state delta of iter K)
-    <dir>/pending/iter=K/*.parquet     (full retry queue after iter K)
-    <dir>/metrics/iter=K/*.parquet     (per-partition fetch metrics)
-    <dir>/_meta.json                   (latest committed iteration)
+Each entry names only the dirs its iteration added (``pending``
+carries the previous entry's queue forward when K does not rewrite
+it), so the manifest grows O(iterations). Reads at K follow the
+entries ≤ K: the union of the ``seen``/``downloads`` deltas, the newest
+``frontier``/``pending``/``metrics``. A commit at K also drops the
+entries ≥ K (a time-travel resume's abandoned timeline), then deletes
+every dir the manifest does not name: a crash anywhere leaves the last
+commit intact plus unreferenced dirs that the next commit removes, and
+every committed snapshot is immutable. A ``_meta.json`` without
+``snaps`` raises, and none of its dirs is deleted.
 
 ``downloads`` deltas are MERGE-shaped: the state machine closes each
 url exactly once (J2 anti-joins the log), so the deltas are disjoint
-and their union IS the merged downloads table — the same final state
-an Iceberg ``MERGE INTO`` of each delta would produce, with the
-append + commit-pointer discipline standing in for the snapshot
-commit. ``merged_downloads`` is that read-side merge view; ``pending``
-is a full (small) snapshot per iteration, like ``frontier``.
+and their union (``merged_downloads``) IS the table an Iceberg
+``MERGE INTO`` of each delta would produce.
 
-``_meta.json`` is written last (rename-into-place), so a crash mid-
-iteration leaves the previous snapshot authoritative — the same
-commit-pointer discipline an Iceberg snapshot gives; on a cluster this
-class is swapped for Iceberg ``MERGE INTO``/append on the same
-schemas (the table layout IS Iceberg-partition-shaped: hive-style
-``iter=K`` directories). Resume = read all ``seen`` iters ≤ K and the
-``frontier`` of K.
-
-Table maintenance mirrors Iceberg's procedures (required at 10^10-URL
-scale, where frontier/pending snapshots grow per superstep and delta
-dirs accumulate small files): :meth:`SnapshotStore.expire_snapshots`
-bounds per-iteration state to a retention window behind a moving
-``horizon`` (time travel below it becomes unavailable, exactly
-Iceberg's contract; wired into the loop via
-``CrawlConfig.snapshot_keep``), and
-:meth:`SnapshotStore.rewrite_data_files` compacts the seen/downloads
-deltas at-or-below the horizon into one merged delta. Pinned in
-tests/test_maintenance.py: maintenance never changes what a retained
-resume point sees.
+Table maintenance mirrors Iceberg's procedures as manifest edits
+followed by the same commit: :meth:`SnapshotStore.expire_snapshots`
+bounds per-iteration state to a window behind a moving ``horizon``
+(wired into the loop via ``CrawlConfig.snapshot_keep``) and
+:meth:`SnapshotStore.rewrite_data_files` compacts the deltas at or
+below it. tests/test_maintenance.py pins that maintenance never changes
+what a retained resume point sees, and that a crash at any file
+mutation leaves every read at its before or after state.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
 import shutil
-import tempfile
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
+
+TABLES = ("seen", "frontier", "downloads", "pending", "metrics")
+
+
+def _keys(snaps: dict, table: str, upto: int) -> list[int]:
+    """Iterations ≤ ``upto`` whose manifest entry names ``table``."""
+    return [k for k in sorted(snaps) if k <= upto and table in snaps[k]]
 
 
 class SnapshotStore:
     def __init__(self, root: str):
         self.root = root
         os.makedirs(root, exist_ok=True)
+
+    # -- manifest -----------------------------------------------------------
+
+    def _manifest(self) -> dict:
+        meta = os.path.join(self.root, "_meta.json")
+        if not os.path.exists(meta):
+            return {"iter": None, "horizon": 0, "snaps": {}}
+        with open(meta) as f:
+            m = json.load(f)
+        if "snaps" not in m:
+            raise ValueError(
+                f"{meta} holds no snapshot manifest (an iter=K directory "
+                "store); it cannot be read or written — use a new "
+                "checkpoint_dir"
+            )
+        m["snaps"] = {int(k): e for k, e in m["snaps"].items()}
+        return m
+
+    def _commit(self, m: dict) -> None:
+        """Atomically replace the manifest, then delete every directory
+        it does not name (writes of crashed or abandoned commits)."""
+        tmp = os.path.join(self.root, "_meta.json.tmp")
+        with open(tmp, "w") as f:
+            json.dump(m, f)
+        os.replace(tmp, os.path.join(self.root, "_meta.json"))
+        live = {d for e in m["snaps"].values() for d in e.values()}
+        for table in TABLES:
+            for d in glob.glob(os.path.join(glob.escape(self.root), table, "*")):
+                if os.path.relpath(d, self.root) not in live:
+                    shutil.rmtree(d)
+
+    def _write(self, table: str, it: int, df: DataFrame) -> str:
+        name = f"{table}/{it}-{uuid.uuid4().hex}"
+        df.write.parquet(os.path.join(self.root, name))
+        return name
+
+    def _paths(self, table: str, upto: int) -> list[str]:
+        snaps = self._manifest()["snaps"]
+        return [
+            os.path.join(self.root, snaps[k][table])
+            for k in _keys(snaps, table, upto)
+        ]
 
     # -- commit -------------------------------------------------------------
 
@@ -68,192 +114,113 @@ class SnapshotStore:
         metrics: DataFrame | None = None,
         downloads_pending: DataFrame | None = None,
     ) -> None:
-        seen_delta.write.mode("overwrite").parquet(f"{self.root}/seen/iter={it}")
-        frontier.write.mode("overwrite").parquet(f"{self.root}/frontier/iter={it}")
-        dl_dir = f"{self.root}/downloads/iter={it}"
-        if downloads_delta is not None:
-            downloads_delta.write.mode("overwrite").parquet(dl_dir)
-        elif os.path.isdir(dl_dir):
-            # a superstep without a delta must not inherit one from an
-            # abandoned timeline (a time-travel resume re-running iter
-            # K): merged_downloads unions every downloads/iter<=K dir
-            shutil.rmtree(dl_dir)
-        if downloads_pending is not None:
-            downloads_pending.write.mode("overwrite").parquet(
-                f"{self.root}/pending/iter={it}"
+        m = self._manifest()
+        snaps = {k: e for k, e in m["snaps"].items() if k < it}
+        entry = {
+            table: self._write(table, it, df)
+            for table, df in (
+                ("seen", seen_delta),
+                ("frontier", frontier),
+                ("downloads", downloads_delta),
+                ("pending", downloads_pending),
+                ("metrics", metrics),
             )
-        if metrics is not None:
-            metrics.write.mode("overwrite").parquet(f"{self.root}/metrics/iter={it}")
-        self._commit_meta(it)
-
-    def _commit_meta(self, it: int, horizon: int | None = None) -> None:
-        h = self.horizon() if horizon is None else horizon
-        fd, tmp = tempfile.mkstemp(dir=self.root, suffix=".json")
-        with os.fdopen(fd, "w") as f:
-            json.dump({"iter": it, "horizon": h}, f)
-        os.replace(tmp, f"{self.root}/_meta.json")  # atomic commit pointer
+            if df is not None
+        }
+        prev = snaps[max(snaps)] if snaps else {}
+        if "pending" not in entry and "pending" in prev:
+            entry["pending"] = prev["pending"]
+        snaps[it] = entry
+        self._commit({"iter": it, "horizon": m["horizon"], "snaps": snaps})
 
     # -- resume -------------------------------------------------------------
 
     def latest_iter(self) -> int | None:
-        meta = f"{self.root}/_meta.json"
-        if not os.path.exists(meta):
-            return None
-        with open(meta) as f:
-            return json.load(f)["iter"]
+        return self._manifest()["iter"]
 
     def horizon(self) -> int:
         """Oldest resumable iteration (0 until expire_snapshots runs)."""
-        meta = f"{self.root}/_meta.json"
-        if not os.path.exists(meta):
-            return 0
-        with open(meta) as f:
-            return json.load(f).get("horizon", 0)
+        return self._manifest()["horizon"]
 
     # -- maintenance (the Iceberg table-maintenance procedures) -------------
 
     def expire_snapshots(self, keep_last: int) -> int:
-        """``expire_snapshots`` analogue: drop per-iteration state older
-        than the last ``keep_last`` committed iterations, so the store's
-        footprint is O(retained window + deltas) instead of
-        O(iterations) — at a 10^10-URL frontier the full-frontier and
-        retry-queue snapshots are the terms that grow per superstep.
-        Time travel (``resume(as_of=K)``) below the new horizon becomes
-        unavailable — exactly Iceberg's expire contract. The append-only
-        delta tables (``seen``, ``downloads``) are untouched: every
-        retained snapshot still references all of them (compact those
-        with :meth:`rewrite_data_files`). ``metrics`` is kept whole as
-        the permanent per-partition lineage record (O(partitions)/iter —
-        negligible). Single maintenance writer, no concurrent crawl —
-        the same operational contract as Iceberg's procedures. Returns
-        the new horizon.
+        """``expire_snapshots`` analogue: clear the ``frontier`` and
+        ``pending`` references older than the last ``keep_last``
+        committed iterations, so the footprint is O(retained window +
+        deltas) instead of O(iterations) — at a 10^10-URL frontier those
+        full snapshots are the terms that grow per superstep. Time
+        travel below the new horizon becomes unavailable (Iceberg's
+        expire contract); the horizon entry still names its retry queue
+        because ``pending`` is carried forward. ``seen``/``downloads``
+        deltas (every retained snapshot reads them; compact them with
+        :meth:`rewrite_data_files`) and ``metrics`` (the permanent
+        lineage record, O(partitions)/iter) stay. Single maintenance
+        writer, no concurrent crawl. Returns the new horizon.
         """
         assert keep_last >= 1
-        last = self.latest_iter()
-        if last is None:
+        m = self._manifest()
+        if m["iter"] is None:
             return 0
-        new_h = max(self.horizon(), last - keep_last + 1)
-        # commit the horizon FIRST: every state below it is thereby
-        # forbidden to readers (resume raises), so a crash anywhere in
-        # the file mutations below leaves only harmless extra files
-        # that the next run removes. The reverse order would have a
-        # window where a still-"resumable" below-horizon iteration
-        # reads a relocated (stale) retry queue.
-        self._commit_meta(last, horizon=new_h)
-        # a retained iteration may still depend on the newest retry-
-        # queue snapshot BELOW the horizon (pending is only written on
-        # iterations that ran the download machine, and read_pending
-        # walks back): materialize that walk-back result AT the horizon
-        # before dropping it — identical content for every retained read
-        below = [
-            k
-            for k in range(new_h)
-            if os.path.isdir(f"{self.root}/pending/iter={k}")
-        ]
-        if below and not os.path.isdir(f"{self.root}/pending/iter={new_h}"):
-            os.rename(
-                f"{self.root}/pending/iter={below[-1]}",
-                f"{self.root}/pending/iter={new_h}",
-            )
-        for table in ("frontier", "pending"):
-            for k in range(new_h):
-                d = f"{self.root}/{table}/iter={k}"
-                if os.path.isdir(d):
-                    shutil.rmtree(d)
-        return new_h
+        m["horizon"] = max(m["horizon"], m["iter"] - keep_last + 1)
+        for k, e in m["snaps"].items():
+            if k < m["horizon"]:
+                e.pop("frontier", None)
+                e.pop("pending", None)
+        self._commit(m)
+        return m["horizon"]
 
     def rewrite_data_files(self, spark: SparkSession) -> int:
-        """``rewrite_data_files`` (compaction) analogue for the
-        append-only delta tables: merge every ``seen``/``downloads``
-        delta at or below the horizon into ONE delta dir at the horizon.
-        Reads are union-shaped (read_seen/read_downloads), so the merged
-        dir is read-equivalent for every retained iteration; iterations
-        below the horizon are already expired, which is exactly why
-        compaction must never cross it (a merged delta above a live
-        resume point could not be excluded by ``upto``). Bounds the
-        store's file count to O(retained window) where a long crawl
-        otherwise accumulates one small-file dir per superstep — the
-        classic streaming-ingest small-files problem. Returns the number
+        """``rewrite_data_files`` (compaction) analogue: merge every
+        ``seen``/``downloads`` delta at or below the horizon into ONE
+        delta named by the horizon entry. Reads are union-shaped, so the
+        merged delta is read-equivalent for every retained iteration;
+        compaction never crosses the horizon (a merged delta above a
+        live resume point could not be excluded by ``upto``). Bounds the
+        file count to O(retained window) where a long crawl otherwise
+        accumulates one small-file dir per superstep. Returns the number
         of delta dirs removed.
-
-        Crash contract (this is rename-based, not an atomic snapshot
-        commit like real Iceberg): an interrupted compaction must be
-        RE-RUN before the store is read again — the recovery preamble
-        restores a pre-swap horizon delta from ``_compact_old``, and
-        the rewrite dedupes full rows, which heals the
-        swap-done-sources-not-yet-removed window (deltas are
-        row-disjoint by construction, so exact-duplicate rows can only
-        be crash artifacts). Pinned in tests/test_maintenance.py.
         """
-        h = self.horizon()
+        m = self._manifest()
+        h, snaps = m["horizon"], m["snaps"]
         removed = 0
         for table in ("seen", "downloads"):
-            base = f"{self.root}/{table}"
-            tmp = f"{base}/_compact_tmp"
-            bak = f"{base}/_compact_old"
-            target = f"{base}/iter={h}"
-            # recovery from a prior interrupted run: _compact_old is
-            # the authoritative pre-swap horizon delta — restore it if
-            # the swap never completed; a leftover _compact_tmp is
-            # stale either way and gets recomputed
-            if os.path.isdir(bak):
-                if not os.path.isdir(target):
-                    os.rename(bak, target)
-                else:
-                    shutil.rmtree(bak)
-            if os.path.isdir(tmp):
-                shutil.rmtree(tmp)
-            dirs = [
-                k for k in range(h + 1) if os.path.isdir(f"{base}/iter={k}")
-            ]
-            if len(dirs) <= 1:
+            ks = _keys(snaps, table, h)
+            if len(ks) <= 1:
                 continue
-            df = spark.read.parquet(
-                *(f"{base}/iter={k}" for k in dirs)
-            ).dropDuplicates()
-            df.write.mode("overwrite").parquet(tmp)
-            if os.path.isdir(target):
-                os.rename(target, bak)
-            os.rename(tmp, target)
-            for k in dirs:
-                d = f"{base}/iter={k}"
-                if k != h and os.path.isdir(d):
-                    shutil.rmtree(d)
-                    removed += 1
-            if os.path.isdir(bak):
-                shutil.rmtree(bak)
+            paths = [os.path.join(self.root, snaps[k].pop(table)) for k in ks]
+            merged = self._write(table, h, spark.read.parquet(*paths))
+            snaps.setdefault(h, {})[table] = merged
+            removed += len(ks) - 1
+        self._commit(m)
         return removed
 
+    # -- reads --------------------------------------------------------------
+
     def read_seen(self, spark: SparkSession, upto: int) -> DataFrame:
-        paths = [
-            f"{self.root}/seen/iter={k}"
-            for k in range(upto + 1)
-            if os.path.isdir(f"{self.root}/seen/iter={k}")
-        ]
-        return spark.read.parquet(*paths)
-
-    def read_frontier(self, spark: SparkSession, it: int) -> DataFrame:
-        return spark.read.parquet(f"{self.root}/frontier/iter={it}")
-
-    def read_downloads(self, spark: SparkSession, upto: int) -> DataFrame | None:
-        paths = [
-            f"{self.root}/downloads/iter={k}"
-            for k in range(upto + 1)
-            if os.path.isdir(f"{self.root}/downloads/iter={k}")
-        ]
-        return spark.read.parquet(*paths) if paths else None
+        return spark.read.parquet(*self._paths("seen", upto))
 
     def merged_downloads(self, spark: SparkSession, upto: int) -> DataFrame | None:
         """Read-side MERGE view of the downloads table: deltas are
         disjoint on ``url`` (the state machine closes each url exactly
-        once), so the union of deltas equals the Iceberg-MERGEd table.
-        Alias of read_downloads, named for the semantic contract."""
-        return self.read_downloads(spark, upto)
+        once), so the union of deltas equals the Iceberg-MERGEd table."""
+        paths = self._paths("downloads", upto)
+        return spark.read.parquet(*paths) if paths else None
+
+    def _newest(self, spark: SparkSession, table: str, it: int) -> DataFrame | None:
+        paths = self._paths(table, it)
+        return spark.read.parquet(paths[-1]) if paths else None
+
+    def read_frontier(self, spark: SparkSession, it: int) -> DataFrame:
+        df = self._newest(spark, "frontier", it)
+        if df is None:
+            raise FileNotFoundError(f"no frontier at or before {it} in {self.root}")
+        return df
 
     def read_pending(self, spark: SparkSession, it: int) -> DataFrame | None:
-        """Latest retry-queue snapshot at or before ``it`` (the queue
-        only changes on iterations that ran the download machine)."""
-        for k in range(it, -1, -1):
-            if os.path.isdir(f"{self.root}/pending/iter={k}"):
-                return spark.read.parquet(f"{self.root}/pending/iter={k}")
-        return None
+        """Retry queue of the newest entry ≤ ``it``."""
+        return self._newest(spark, "pending", it)
+
+    def read_metrics(self, spark: SparkSession, it: int) -> DataFrame | None:
+        """Per-partition metrics rows of the newest entry ≤ ``it``."""
+        return self._newest(spark, "metrics", it)

@@ -40,12 +40,14 @@ Scale notes (100 TB / 10^10 frontier):
   (Spark's runtime Bloom-filter join pruning is enabled in
   session.py; explicit per-shard blooms live in operators/dedup.py).
 * lineage is truncated every iteration (localCheckpoint) or committed
-  durably through plans/checkpoint.SnapshotStore for resume.
+  durably through plans/checkpoint.SnapshotStore for resume: each
+  commit writes new data dirs and atomically replaces one manifest
+  that every read follows.
 * each superstep's extract output is materialized once, as a narrow
   checkpoint (depth, path, links, doc urls, partition id); candidates,
   the download branch and the superstep totals all read it. With a
   snapshot store, its per-partition aggregates (north_rule lineage)
-  are written as ``metrics/iter=K``.
+  are committed as superstep K's ``metrics`` (``read_metrics``).
 """
 
 from __future__ import annotations
@@ -57,7 +59,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from ..functions.predicates import MAX_BODY_SIZE, MAX_DEPTH, MAX_RETRIES, host_present
+from ..functions.predicates import MAX_DEPTH, MAX_RETRIES, body_cap, host_present
 from ..functions.routing import route_decision_col
 from ..functions.urlnorm import host_of_col, normalize_url_compat_col
 from ..operators import dedup as dedup_ops
@@ -182,11 +184,12 @@ class CrawlConfig:
     bloom_bits_per_shard: int | None = None
     # retain only the last K committed snapshots (None = retain all):
     # after each commit the loop runs the store's expire_snapshots —
-    # the Iceberg table-maintenance analogue — so the checkpoint
-    # footprint stays O(K + deltas) instead of growing a full-frontier
-    # + retry-queue snapshot per superstep. Time travel below the
-    # moving horizon becomes unavailable (exactly Iceberg's expire
-    # contract); delta compaction (rewrite_data_files) stays an
+    # the Iceberg table-maintenance analogue, a manifest edit that
+    # drops the full-frontier + retry-queue references below the
+    # horizon and deletes their dirs — so the checkpoint footprint
+    # stays O(K + deltas) instead of growing per superstep. Time travel
+    # below the moving horizon becomes unavailable (exactly Iceberg's
+    # expire contract); delta compaction (rewrite_data_files) stays an
     # explicit offline op, like Iceberg's procedures.
     snapshot_keep: int | None = None
 
@@ -223,7 +226,7 @@ def _prepare_pages(
         return pages.select("url_norm", "html")
     proj = pages.select(
         _norm(F.col(url_col)).alias("url_norm"),
-        F.substring(F.col(html_col), 1, MAX_BODY_SIZE).alias("html"),
+        body_cap(html_col).alias("html"),
     )
     # Partition count sized by DATA, not cores (the thing that carries
     # to 100 TB): ~64 MB target per partition from Catalyst's stats
@@ -728,13 +731,15 @@ def resume(
     redirects: DataFrame | None = None,
 ) -> CrawlResult:
     """Resume a checkpointed crawl from its latest committed snapshot,
-    or — Iceberg-style time travel — from ANY earlier committed
-    iteration via ``as_of``. Every snapshot ≤ the commit pointer is
-    immutable and self-consistent (seen/frontier/downloads/pending all
-    written before the pointer moves), so a continuation from iter K
-    replays iterations K+1.. deterministically and lands on the same
-    final state as the uninterrupted run (tested both ways in
-    tests/test_frontier.py)."""
+    or — Iceberg-style time travel — from ANY earlier retained
+    iteration via ``as_of``. Every committed snapshot is immutable and
+    self-consistent: its data dirs are written under new names before
+    the manifest that lists them replaces the old one, and reads follow
+    only that manifest. A continuation from iter K replays iterations
+    K+1.. deterministically and lands on the same final state as the
+    uninterrupted run (tested both ways in tests/test_frontier.py); its
+    first commit drops the manifest entries above K and deletes the
+    abandoned timeline's dirs."""
     assert cfg.checkpoint_dir, "resume requires cfg.checkpoint_dir"
     store = SnapshotStore(cfg.checkpoint_dir)
     last = store.latest_iter()

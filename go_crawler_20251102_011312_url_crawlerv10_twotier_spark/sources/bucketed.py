@@ -39,7 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.predicates import MAX_BODY_SIZE
+from ..functions.predicates import body_cap
 from ..functions.urlnorm import normalize_url_compat_col
 
 
@@ -62,7 +62,7 @@ def write_bucketed_corpus(
     prep = (
         pages.select(
             normalize_url_compat_col(F.col(url_col)).alias("url_norm"),
-            F.substring(F.col(html_col), 1, MAX_BODY_SIZE).alias("html"),
+            body_cap(html_col).alias("html"),
         )
         .repartition(n_buckets, "url_norm")
         .dropDuplicates(["url_norm"])  # partition-local: same key layout

@@ -60,7 +60,13 @@ def reference_crawl(
             html = corpus.get(norm)
             if html is None:
                 continue  # fetch miss (reference OnError path)
-            body = html[:MAX_BODY_SIZE]  # colly MaxBodySize truncation
+            # colly MaxBodySize truncation counts bytes: slice the UTF-8
+            # bytes and drop a partial trailing code point
+            body = (
+                html.encode("utf-8")[:MAX_BODY_SIZE].decode("utf-8", "ignore")
+                if isinstance(html, str)
+                else html[:MAX_BODY_SIZE]
+            )
             # Decide gets len(body) of a []byte: route on the byte size
             n_bytes = len(body.encode("utf-8") if isinstance(body, str) else body)
             path = route_decide_py(raw, n_bytes)

@@ -10,6 +10,9 @@ import tempfile
 
 import pytest
 
+from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.checkpoint import (
+    SnapshotStore,
+)
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.frontier import (
     CrawlConfig,
     crawl,
@@ -88,11 +91,12 @@ METRICS_SCHEMA = (
 
 def assert_store_metrics_match(spark, ck, metrics):
     """Each committed superstep's per-partition lineage rows
-    (metrics/iter=K) have one row per partition, the store schema, and
-    sum to the superstep's totals in CrawlResult.metrics."""
+    (read_metrics at K) have one row per partition, the store schema,
+    and sum to the superstep's totals in CrawlResult.metrics."""
+    store = SnapshotStore(ck)
     for m in metrics:
         k = m["iter"]
-        df = spark.read.parquet(f"{ck}/metrics/iter={k}")
+        df = store.read_metrics(spark, k)
         assert df.schema.simpleString() == METRICS_SCHEMA, k
         rows = df.collect()
         pids = [r.partition_id for r in rows]
@@ -174,6 +178,41 @@ def test_route_on_bytes_not_characters(spark):
     res = crawl(spark, pages, seeds, CrawlConfig(max_iterations=1))
     (m,) = res.metrics
     assert (m["fetched"], m["fast_cnt"], m["slow_cnt"]) == (1, 0, 1)
+
+
+def test_body_cap_counts_bytes(spark):
+    """The 5 MB body cap (colly MaxBodySize) counts bytes: 3 M two-byte
+    characters are under 5 MiB as characters but over it as bytes, so
+    the link after them is cut off. The cut never splits a code point:
+    with a one-byte prefix, 5 MiB falls inside an 'é' and the body
+    keeps one byte less."""
+    from pyspark.sql import functions as F
+
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.functions.predicates import (
+        MAX_BODY_SIZE,
+    )
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.frontier import (
+        _prepare_pages,
+    )
+
+    body = "é" * 3_000_000 + '<a href="https://cap.example/next">n</a>'
+    assert len(body) < MAX_BODY_SIZE < len(body.encode("utf-8"))
+    pages = spark.createDataFrame(
+        [("https://cap.example/even", body), ("https://cap.example/odd", "a" + body)],
+        "url string, html string",
+    )
+    got = {
+        r.url_norm.rsplit("/", 1)[1]: (r.n, r.link)
+        for r in _prepare_pages(pages, "url", "html").select(
+            "url_norm",
+            F.octet_length("html").alias("n"),
+            F.col("html").contains("cap.example/next").alias("link"),
+        ).collect()
+    }
+    assert got == {
+        "even": (MAX_BODY_SIZE, False),
+        "odd": (MAX_BODY_SIZE - 1, False),
+    }
 
 
 def test_bloom_crawl_identical(spark, full):

@@ -4,12 +4,20 @@ At a 10^10-URL frontier the checkpoint store's growth terms are the
 full-frontier + retry-queue snapshot written per superstep and the
 one-small-file-dir-per-superstep delta accumulation. expire_snapshots
 and rewrite_data_files bound both (checkpoint.py); these tests pin
-that maintenance never changes what a retained resume point sees.
+that maintenance never changes what a retained resume point sees, and
+that a crash at any file mutation of a commit or a maintenance step
+leaves every read at its before or after state.
 """
 
+import itertools
+import json
 import os
+import shutil
+from functools import reduce
 
 import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.readwriter import DataFrameWriter
 
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.checkpoint import (
     SnapshotStore,
@@ -38,13 +46,23 @@ def _state(res):
     )
 
 
-def _iters(root, table):
-    d = os.path.join(root, table)
-    if not os.path.isdir(d):
-        return []
-    return sorted(
-        int(x.split("=")[1]) for x in os.listdir(d) if x.startswith("iter=")
-    )
+def _dirs(root):
+    """Directories on disk that hold files (the store's data dirs),
+    as paths relative to ``root``: footprint is what is on disk, not
+    what the manifest names."""
+    return {
+        os.path.relpath(d, root)
+        for d, _, files in os.walk(root)
+        if files and d != root
+    }
+
+
+def _count(root, table):
+    return sum(d.split(os.sep)[0] == table for d in _dirs(root))
+
+
+def _rows(df):
+    return None if df is None else sorted(tuple(r) for r in df.collect())
 
 
 @pytest.fixture(scope="module")
@@ -59,18 +77,18 @@ def test_expire_then_compact_preserve_retained_resume(spark, ck_run):
     store = SnapshotStore(ck)
     last = store.latest_iter()
     assert last is not None and last >= 4  # quirks chain runs 14 iters
-    n_seen_dirs = len(_iters(ck, "seen"))
-    had_pending_below = any(k < last - 2 for k in _iters(ck, "pending"))
+    n_seen_dirs = _count(ck, "seen")
+    pending_at_h = _rows(store.read_pending(spark, last - 2))
 
     # -- expire: keep the last 3 snapshots ---------------------------------
     h = store.expire_snapshots(keep_last=3)
     assert h == last - 2 == store.horizon()
-    assert _iters(ck, "frontier") == [last - 2, last - 1, last]
-    # pending walk-back state was relocated to the horizon, not lost
-    if had_pending_below:
-        assert min(_iters(ck, "pending")) >= h
-    # append-only delta tables untouched by expire
-    assert len(_iters(ck, "seen")) == n_seen_dirs
+    assert _count(ck, "frontier") == 3
+    assert _count(ck, "pending") == 3
+    # the horizon's retry queue is still named by its entry, not lost
+    assert _rows(store.read_pending(spark, h)) == pending_at_h
+    # delta tables untouched by expire
+    assert _count(ck, "seen") == n_seen_dirs
 
     # time travel to a retained snapshot replays onto the same state
     res = resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck), as_of=h)
@@ -84,45 +102,11 @@ def test_expire_then_compact_preserve_retained_resume(spark, ck_run):
     # the horizon and are untouched)
     removed = store.rewrite_data_files(spark)
     assert removed >= 1
-    assert min(_iters(ck, "seen")) == h  # one merged delta at the horizon
-    assert all(k >= h for k in _iters(ck, "downloads"))
+    # one merged delta at the horizon plus one per iteration above it
+    assert _count(ck, "seen") == store.latest_iter() - h + 1
+    assert _count(ck, "downloads") <= store.latest_iter() - h + 1
     res2 = resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck), as_of=h)
     assert _state(res2) == final
-
-
-def test_compaction_crash_recovery(spark, ck_run, tmp_path):
-    """rewrite_data_files' crash contract: re-running an interrupted
-    compaction restores exactly the pre-compaction data — both crash
-    windows (pre-swap: horizon delta parked in _compact_old; post-swap:
-    merged target coexists with not-yet-removed source dirs, i.e.
-    duplicated rows)."""
-    import shutil as sh
-
-    ck, _ = ck_run
-    store = SnapshotStore(ck)
-    if store.horizon() == 0:  # order-independent: expire+compact first
-        store.expire_snapshots(keep_last=3)
-        store.rewrite_data_files(spark)
-    h = store.horizon()
-    last = store.latest_iter()
-    want = sorted(
-        tuple(r) for r in store.read_seen(spark, last).collect()
-    )
-
-    # window 1 (crash between swap renames): iter=h parked as
-    # _compact_old, target missing, stale tmp left behind
-    sh.move(f"{ck}/seen/iter={h}", f"{ck}/seen/_compact_old")
-    os.makedirs(f"{ck}/seen/_compact_tmp")
-    store.rewrite_data_files(spark)
-    got = sorted(tuple(r) for r in store.read_seen(spark, last).collect())
-    assert got == want
-
-    # window 2 (crash before source-dir removal): a source delta
-    # coexists with the merged target — its rows are duplicated
-    sh.copytree(f"{ck}/seen/iter={h}", f"{ck}/seen/iter={max(0, h - 1)}")
-    assert store.rewrite_data_files(spark) >= 1
-    got = sorted(tuple(r) for r in store.read_seen(spark, last).collect())
-    assert got == want  # exact-duplicate crash artifacts deduped away
 
 
 def test_snapshot_keep_bounds_store_in_the_loop(spark, ck_run, tmp_path):
@@ -133,7 +117,7 @@ def test_snapshot_keep_bounds_store_in_the_loop(spark, ck_run, tmp_path):
     store = SnapshotStore(ck)
     last = store.latest_iter()
     assert store.horizon() == last - 1
-    assert _iters(ck, "frontier") == [last - 1, last]  # O(keep), not O(iters)
+    assert _count(ck, "frontier") == 2  # O(keep), not O(iters)
     # a plain resume (latest snapshot) still lands on the same state
     res2 = resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck))
     assert _state(res2) == final
@@ -158,3 +142,242 @@ def test_rewritten_iter_drops_stale_downloads_delta(spark, tmp_path):
     merged = store.merged_downloads(spark, 1)
     got = set() if merged is None else set(merged.collect())
     assert not got & set(df.collect())
+
+
+# -- crash consistency ------------------------------------------------------
+
+
+def _df(spark, k, tag):
+    return spark.createDataFrame([(k, tag)], "k int, tag string")
+
+
+def _reads(spark, store):
+    """Everything a reader can see: the pointer, the horizon and every
+    table's read at each retained iteration (one collect for all)."""
+    last, h = store.latest_iter(), store.horizon()
+    reads = [
+        df.select(F.lit(k).alias("at"), F.lit(t).alias("t"), "k", "tag")
+        for k in range(h, last + 1)
+        for t, df in (
+            ("seen", store.read_seen(spark, k)),
+            ("frontier", store.read_frontier(spark, k)),
+            ("downloads", store.merged_downloads(spark, k)),
+            ("pending", store.read_pending(spark, k)),
+            ("metrics", store.read_metrics(spark, k)),
+        )
+        if df is not None
+    ]
+    return last, h, _rows(reduce(lambda a, b: a.unionByName(b), reads))
+
+
+class _Crash(Exception):
+    pass
+
+
+def _inject(mp, n, only=("parquet", "replace", "rename", "rmtree")):
+    """Raise instead of performing the n-th file mutation: a parquet
+    write, ``os.replace``, ``os.rename`` or ``shutil.rmtree``."""
+    calls = [0]
+
+    def wrap(fn):
+        def inner(*a, **kw):
+            calls[0] += 1
+            if calls[0] == n:
+                raise _Crash(fn.__name__)
+            return fn(*a, **kw)
+
+        return inner
+
+    for owner, name in (
+        (DataFrameWriter, "parquet"), (os, "replace"), (os, "rename"), (shutil, "rmtree"),
+    ):
+        if name in only:
+            mp.setattr(owner, name, wrap(getattr(owner, name)))
+
+
+def test_crash_before_commit_keeps_committed_snapshot(spark, tmp_path, monkeypatch):
+    """Defect 1: a re-commit of K < latest (a time-travel resume) that
+    crashes after its data writes, before the pointer moves, must not
+    change the committed snapshot ``latest``."""
+    store = SnapshotStore(str(tmp_path))
+    for k in range(4):
+        store.write_iter(k, _df(spark, k, "a"), _df(spark, k, "a"))
+    want = _rows(store.read_seen(spark, 3))
+    with monkeypatch.context() as mp:
+        _inject(mp, 1, only=("replace",))
+        with pytest.raises(_Crash):
+            store.write_iter(2, _df(spark, 2, "b"), _df(spark, 2, "b"))
+    assert store.latest_iter() == 3
+    assert _rows(store.read_seen(spark, 3)) == want
+
+
+def test_recommit_without_pending_drops_abandoned_queue(spark, tmp_path):
+    """Defect 2: re-committing K without a retry queue reads the queue
+    the new timeline carries (K-1's), not the abandoned one."""
+    store = SnapshotStore(str(tmp_path))
+    store.write_iter(0, _df(spark, 0, "s"), _df(spark, 0, "f"),
+                     downloads_pending=_df(spark, 0, "q0"))
+    store.write_iter(1, _df(spark, 1, "s"), _df(spark, 1, "f"),
+                     downloads_pending=_df(spark, 1, "q1"))
+    store.write_iter(1, _df(spark, 1, "s"), _df(spark, 1, "f"))
+    assert _rows(store.read_pending(spark, 1)) == [(0, "q0")]
+    assert _count(str(tmp_path), "pending") == 1
+
+
+def test_recommit_without_metrics_drops_abandoned_metrics(spark, tmp_path):
+    """Defect 3: re-committing K without metrics leaves no abandoned
+    metrics rows on disk or in reads."""
+    store = SnapshotStore(str(tmp_path))
+    store.write_iter(1, _df(spark, 1, "s"), _df(spark, 1, "f"),
+                     metrics=_df(spark, 1, "m"))
+    store.write_iter(1, _df(spark, 1, "s"), _df(spark, 1, "f"))
+    assert _count(str(tmp_path), "metrics") == 0
+    assert store.read_metrics(spark, 1) is None
+
+
+def test_store_without_manifest_is_refused(spark, tmp_path):
+    """A ``_meta.json`` that holds no manifest (the retired iter=K
+    directory layout) raises on every read and write, and none of its
+    directories is garbage-collected."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.checkpoint import (
+        TABLES,
+    )
+
+    root = str(tmp_path)
+    for table in TABLES:
+        _df(spark, 0, "old").write.parquet(os.path.join(root, table, "iter=0"))
+    with open(os.path.join(root, "_meta.json"), "w") as f:
+        json.dump({"iter": 0, "horizon": 0}, f)
+    before = _dirs(root)
+    store = SnapshotStore(root)
+    for op in (
+        lambda: store.read_seen(spark, 0),
+        lambda: store.write_iter(1, _df(spark, 1, "s"), _df(spark, 1, "f")),
+        lambda: store.expire_snapshots(1),
+        lambda: store.rewrite_data_files(spark),
+    ):
+        with pytest.raises(ValueError, match="manifest"):
+            op()
+    assert _dirs(root) == before
+
+
+def _base_store(spark, root):
+    """Two committed iterations touching all five tables; pending is
+    written at 0 only and carried forward to 1."""
+    store = SnapshotStore(root)
+    for k in range(2):
+        store.write_iter(
+            k, _df(spark, k, "s"), _df(spark, k, "f"),
+            downloads_delta=_df(spark, k, "d"),
+            metrics=_df(spark, k, "m"),
+            downloads_pending=_df(spark, k, "q") if k == 0 else None,
+        )
+    return store
+
+
+def test_interrupted_compaction_keeps_seen(spark, tmp_path, monkeypatch):
+    """Defect 4: rewrite_data_files interrupted at any file mutation
+    (e.g. after it set the horizon delta aside) must not lose seen rows
+    before anyone re-runs it."""
+    base = str(tmp_path / "base")
+    _base_store(spark, base).expire_snapshots(1)
+    want = _rows(SnapshotStore(base).read_seen(spark, 1))
+    for n in itertools.count(1):
+        work = str(tmp_path / str(n))
+        shutil.copytree(base, work)
+        store = SnapshotStore(work)
+        with monkeypatch.context() as mp:
+            _inject(mp, n)
+            try:
+                store.rewrite_data_files(spark)
+                break
+            except _Crash:
+                pass
+        assert _rows(store.read_seen(spark, 1)) == want, n
+    assert n > 2
+
+
+def test_fault_injection_every_mutation(spark, tmp_path, monkeypatch):
+    """A crash at each file mutation of write_iter (a time-travel
+    re-commit), expire_snapshots and rewrite_data_files leaves every
+    read at either the before or the after state, without re-running
+    anything; re-running the operation then removes every directory
+    the crash left."""
+    base = str(tmp_path / "base")
+    _base_store(spark, base)
+    expired = str(tmp_path / "expired")
+    shutil.copytree(base, expired)
+    SnapshotStore(expired).expire_snapshots(1)  # horizon 1: deltas to merge
+    cases = (
+        ("write_iter", base, lambda s: s.write_iter(
+            1, _df(spark, 1, "s2"), _df(spark, 1, "f2"),
+            downloads_delta=_df(spark, 1, "d2"), metrics=_df(spark, 1, "m2"),
+        )),
+        ("expire_snapshots", base, lambda s: s.expire_snapshots(1)),
+        ("rewrite_data_files", expired, lambda s: s.rewrite_data_files(spark)),
+    )
+    kinds = set()
+    for name, start, op in cases:
+        ref = str(tmp_path / name / "ref")
+        shutil.copytree(start, ref)
+        before = _reads(spark, SnapshotStore(ref))
+        op(SnapshotStore(ref))
+        after, n_dirs = _reads(spark, SnapshotStore(ref)), len(_dirs(ref))
+        assert after != before or n_dirs < len(_dirs(start)), name
+        for n in itertools.count(1):
+            work = str(tmp_path / name / str(n))
+            shutil.copytree(start, work)
+            store = SnapshotStore(work)
+            with monkeypatch.context() as mp:
+                _inject(mp, n)
+                try:
+                    op(store)
+                    break  # n exceeds the operation's mutations
+                except _Crash as e:
+                    kinds.add(e.args[0])
+            assert _reads(spark, store) in (before, after), (name, n)
+            op(store)
+            assert (store.latest_iter(), store.horizon()) == after[:2], (name, n)
+            assert len(_dirs(work)) == n_dirs, (name, n)
+        assert n > 2, name
+    assert kinds == {"parquet", "replace", "rmtree"}
+
+
+def test_resume_after_injected_crash(spark, ck_run, tmp_path, monkeypatch):
+    """Crawl level: a crash between the data writes of superstep 3 and
+    its manifest replace leaves superstep 2 committed; resume lands on
+    the uninterrupted state and leaves no orphaned directory."""
+    _, final = ck_run
+    ck = str(tmp_path / "ck")
+    with monkeypatch.context() as mp:
+        _inject(mp, 4, only=("replace",))  # commits 0, 1, 2 succeed
+        with pytest.raises(_Crash):
+            _run(spark, CrawlConfig(checkpoint_dir=ck))
+    store = SnapshotStore(ck)
+    assert store.latest_iter() == 2
+    res = resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck))
+    assert _state(res) == final
+    assert _count(ck, "seen") == store.latest_iter() + 1
+
+
+def test_time_travel_resume_removes_abandoned_timeline(spark, tmp_path):
+    """A time-travel resume under a different budget: after its first
+    commit, no directory written only by the abandoned timeline is on
+    disk, and the store reads the new timeline."""
+    ck = str(tmp_path)
+    _run(spark, CrawlConfig(checkpoint_dir=ck, max_iterations=1))  # commits 0, 1
+    kept = _dirs(ck)
+    resume(spark, quirk_pages(spark), CrawlConfig(checkpoint_dir=ck, max_iterations=4))
+    abandoned = _dirs(ck) - kept
+    assert abandoned
+    res = resume(
+        spark, quirk_pages(spark),
+        CrawlConfig(checkpoint_dir=ck, max_iterations=2, budget_per_host=1),
+        as_of=1,
+    )
+    on_disk = _dirs(ck)
+    assert not on_disk & abandoned
+    assert kept <= on_disk
+    store = SnapshotStore(ck)
+    assert store.latest_iter() == 2
+    assert _rows(store.read_seen(spark, 2)) == _rows(res.seen)

@@ -13,9 +13,10 @@ Semantics replicated from the documented contract of
 0.0 for empty; flags only at raw_bytes >= 512; repetitive:
 0 < ratio < 0.25; incompressible: ratio > 0.72).
 
-Usage: python tools/make_compression_fixture.py [out_path]
-Writes fixtures/compression_expected.parquet by default. Deterministic
-for a fixed zlib build (same container for builder, driver, judge).
+Usage: python tools/make_compression_fixture.py [out_path [sf_dir ...]]
+Writes fixtures/compression_expected.parquet from SF_DIRS by default.
+Deterministic for a fixed zlib build (same container for builder,
+driver, judge).
 """
 
 import hashlib
@@ -33,9 +34,9 @@ MIN_FLAG_BYTES = 512
 SF_DIRS = ["/root/testdata/sf0.001", "/root/testdata/sf0.01", "/root/testdata/sf0.1"]
 
 
-def main(out_path: str) -> None:
+def main(out_path: str, sf_dirs: list[str]) -> None:
     seen = {}
-    for d in SF_DIRS:
+    for d in sf_dirs:
         t = pq.read_table(f"{d}/documents.parquet", columns=["text"])
         for v in t.column("text").to_pylist():
             s = v if v is not None else ""
@@ -69,4 +70,7 @@ def main(out_path: str) -> None:
 
 
 if __name__ == "__main__":
-    main(sys.argv[1] if len(sys.argv) > 1 else "fixtures/compression_expected.parquet")
+    main(
+        sys.argv[1] if len(sys.argv) > 1 else "fixtures/compression_expected.parquet",
+        sys.argv[2:] or SF_DIRS,
+    )
