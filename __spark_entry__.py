@@ -2,11 +2,12 @@
 
 ``entry(spark)`` runs the flagship frontier crawl at sf0.001.
 ``queries()`` exposes one callable per implemented operator from
-SURVEY.md §2 (+ the training-data operators) — 131 entries, ALL 131
-with exact DuckDB oracles (compression_signal, whose zlib exists in
-no SQL engine, compares against a precomputed independent-zlib
-fixture — tools/make_compression_fixture.py). Row-by-row map:
-COVERAGE.md.
+SURVEY.md §2 (+ the training-data operators) — 131 entries, each
+compared exactly against a DuckDB oracle. One oracle is not pure SQL:
+zlib exists in no SQL engine, so compression_signal's takes its
+per-text zlib byte counts from a fixture built by an independent
+Python pass (tools/make_compression_fixture.py) and derives the rest
+in SQL. Row-by-row map: COVERAGE.md.
 
 Synthetic inputs are derived deterministically from the driver's
 ``documents``/``embeddings``/``events`` tables; where Spark and the
@@ -2024,11 +2025,11 @@ def q_cms_heavy_hitters(spark, sf_dir):
 def q_compression_signal(spark, sf_dir):
     """zlib-ratio quality signal (curation.compression_signal) over
     documents. zlib exists in neither SQL engine, so the oracle joins
-    a precomputed expected table (independent plain-Python zlib pass,
+    precomputed zlib byte counts (independent plain-Python pass,
     tools/make_compression_fixture.py, keyed by md5(text) so one
-    static SQL string is exact at every sf) — a full exact gate;
-    threshold/edge semantics additionally pytest-pinned
-    (test_curation)."""
+    static SQL string is exact at every sf) and computes the ratio and
+    both flags itself; threshold/edge semantics additionally
+    pytest-pinned (test_curation)."""
     from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.curation import (
         compression_signal,
     )
@@ -2114,9 +2115,10 @@ def q_host_hits(spark, sf_dir):
 
 
 def q_metrics_rollup(spark, sf_dir):
-    """A1/A2 routing-split metrics over the clean corpus."""
+    """A1/A2 routing-split metrics over the clean corpus, routed on
+    the body's byte length like the loop (the reference's len(body))."""
     pages = pagesrc.synth_clean_pages(spark, sf_dir)
-    routed = pages.withColumn("path", route_decision_col("url", F.length("html")))
+    routed = pages.withColumn("path", route_decision_col("url", F.octet_length("html")))
     return routed.groupBy("host").agg(
         F.count("*").alias("pages"),
         F.sum(F.when(F.col("path") == "fast", 1).otherwise(0)).alias("n_fast"),
@@ -4667,18 +4669,35 @@ SELECT sp.doc_id,
   r.clean_text
 FROM sp JOIN r USING (doc_id)
 """,
-        # expected table precomputed by an INDEPENDENT plain-Python
-        # zlib pass (tools/make_compression_fixture.py) over every
-        # distinct text in the sf dirs, keyed by md5(text) so this one
-        # string is exact at any scale factor — upgrades the formerly
-        # rows-only gate to a full rows+schema+hash compare. Path
-        # derived from this file's location so the gate runs from any
-        # checkout path, not just /root/repo.
+        # only the zlib byte counts come from the fixture (an
+        # INDEPENDENT plain-Python zlib pass over every distinct text,
+        # tools/make_compression_fixture.py, keyed by md5(text) so this
+        # one string is exact at any scale factor); ratio and flags are
+        # derived here. ratio = comp/raw rounded to 6 places half-to-
+        # even, in integers: ties such as 89/128 are exact in binary,
+        # and DuckDB's round() takes them up where Python's takes them
+        # to even. Path derived from this file's location so the gate
+        # runs from any checkout path.
         "compression_signal": f"""
-SELECT d.doc_id, e.raw_bytes, e.comp_bytes, e.ratio, e.repetitive, e.incompressible
-FROM documents d
-JOIN read_parquet('{_COMPRESSION_FIXTURE}') e
-  ON md5(coalesce(d.text, '')) = e.text_md5
+WITH e AS (
+  SELECT d.doc_id, e.raw_bytes, e.comp_bytes,
+    e.comp_bytes * 1000000 // nullif(e.raw_bytes, 0) AS q,
+    2 * (e.comp_bytes * 1000000 % nullif(e.raw_bytes, 0)) AS r2
+  FROM documents d
+  JOIN read_parquet('{_COMPRESSION_FIXTURE}') e
+    ON md5(coalesce(d.text, '')) = e.text_md5
+),
+r AS (
+  SELECT doc_id, raw_bytes, comp_bytes,
+    CASE WHEN raw_bytes = 0 THEN 0.0
+         ELSE (q + CASE WHEN r2 > raw_bytes OR (r2 = raw_bytes AND q % 2 = 1)
+                        THEN 1 ELSE 0 END) / 1000000.0 END AS ratio
+  FROM e
+)
+SELECT doc_id, raw_bytes, comp_bytes, ratio,
+  raw_bytes >= 512 AND ratio > 0 AND ratio < 0.25 AS repetitive,
+  raw_bytes >= 512 AND ratio > 0.72 AS incompressible
+FROM r
 """,
         "soft404": f"""
 WITH s AS ({SOFT404_SYNTH_SQL}),
@@ -4779,8 +4798,8 @@ SELECT host, round(pr, 6) AS pagerank FROM p3
         "metrics_rollup": f"""
 WITH p AS ({pagesrc.clean_pages_sql()})
 SELECT host, count(*) AS pages,
-  CAST(sum(CASE WHEN {_route_case('url', 'length(html)')} = 'fast' THEN 1 ELSE 0 END) AS BIGINT) AS n_fast,
-  CAST(sum(CASE WHEN {_route_case('url', 'length(html)')} = 'slow' THEN 1 ELSE 0 END) AS BIGINT) AS n_slow
+  CAST(sum(CASE WHEN {_route_case('url', 'strlen(html)')} = 'fast' THEN 1 ELSE 0 END) AS BIGINT) AS n_fast,
+  CAST(sum(CASE WHEN {_route_case('url', 'strlen(html)')} = 'slow' THEN 1 ELSE 0 END) AS BIGINT) AS n_slow
 FROM p GROUP BY host
 """,
         "dedup_exact": """

@@ -652,8 +652,8 @@ def strip_host_boilerplate(
       hashed by id — fetch.salted_host_repartition's move,
       fetch.py:69-78) so even the mega-host's doc rows spread across
       ``salt_partitions`` tasks (64 salts measure a 0.12 max-task row
-      share on a 90%-one-host corpus vs 0.90 unsalted — bench.py
-      --skew-boiler; AQE's skew-join does NOT catch this case below
+      share on a 90%-one-host corpus vs 0.90 unsalted — BENCH.md
+      §7a; AQE's skew-join does NOT catch this case below
       its 256 MB partition threshold, so the salt is load-bearing);
     * stripping is a map-side array ``filter`` on the already-split
       text — original order preserved for free, no posexplode, no
@@ -662,7 +662,7 @@ def strip_host_boilerplate(
     Two wide shuffles total (df count + docs-side of the salted join,
     the latter skipped entirely when AQE broadcasts), versus four in
     the naive plan. Results are identical; ``salt_partitions<=1``
-    gives the unsalted join (bench.py --skew-boiler A/Bs the two).
+    gives the unsalted join (BENCH.md §7a A/Bs the two).
 
     Output, one row per input doc (docs with ONLY boilerplate keep an
     empty clean_text rather than vanishing):
@@ -850,9 +850,9 @@ def compression_signal(
     curation pass wants cheap.
 
     One Arrow-batched ``mapInPandas`` hop (zlib is not expressible in
-    either SQL engine — the gate's oracle therefore compares against a
-    precomputed independent-zlib expected table,
-    tools/make_compression_fixture.py); map-only, no shuffle, and only
+    either SQL engine — the gate's oracle therefore takes precomputed
+    independent-zlib byte counts from tools/make_compression_fixture.py
+    and derives ratio and flags in SQL); map-only, no shuffle, and only
     (id, text) crosses to Python. Ratio is deterministic for a fixed
     zlib level within one environment.
 

@@ -175,13 +175,6 @@ class CrawlConfig:
     # cost. Default False at fixture scale (probe overhead > savings
     # when seen fits in a broadcast anyway).
     use_bloom: bool = False
-    # None = auto: resolved once at crawl start from the initial seen
-    # count (dedup.resolve_bloom_sizing — bounded per-shard pack work),
-    # then held fixed so incremental OR-merges stay structure-
-    # compatible. For a crawl expected to grow seen far beyond its
-    # seed set, pass explicit sizing for the EXPECTED final size.
-    bloom_shards: int | None = None
-    bloom_bits_per_shard: int | None = None
     # retain only the last K committed snapshots (None = retain all):
     # after each commit the loop runs the store's expire_snapshots —
     # the Iceberg table-maintenance analogue, a manifest edit that
@@ -456,13 +449,11 @@ def crawl(
     metrics: list[dict] = []
 
     bloom_shards = None
-    bloom_ns = bloom_bits = 0  # resolved sizing, fixed for the crawl
+    # sized once from the initial seen count, then held fixed so the
+    # incremental OR-merges stay structure-compatible
+    bloom_ns = bloom_bits = 0
     if cfg.use_bloom:
-        bloom_ns, bloom_bits = cfg.bloom_shards, cfg.bloom_bits_per_shard
-        if bloom_ns is None or bloom_bits is None:
-            auto_ns, auto_bits = dedup_ops.resolve_bloom_sizing(seen.count())
-            bloom_ns = bloom_ns if bloom_ns is not None else auto_ns
-            bloom_bits = bloom_bits if bloom_bits is not None else auto_bits
+        bloom_ns, bloom_bits = dedup_ops.resolve_bloom_sizing(seen.count())
         bloom_shards = dedup_ops.build_bloom_shards(
             seen, "url_norm", bloom_ns, bloom_bits
         ).localCheckpoint(eager=True)

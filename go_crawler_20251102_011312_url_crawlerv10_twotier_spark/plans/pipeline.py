@@ -24,8 +24,7 @@ Design, driven by the two failure modes only a composed run can show:
 * **Instrumented**: per stage — wall seconds, rows in/out, and the
   JVM heap PEAK during the stage (MemoryPoolMXBeans reset/read, which
   in local mode is the one JVM that matters). BENCH.md §9 publishes
-  the table; `python bench.py --pipeline` drives it at the padded
-  1 M-page scale.
+  the table, measured at the padded 1 M-page scale.
 
 Resume contract (pinned by tests/test_pipeline.py): running with
 ``stop_after=k`` and re-running to completion yields the exact same

@@ -23,28 +23,20 @@ def get_spark(
     """Create (or get) a SparkSession.
 
     ``cores`` defaults to ``$SPARK_GRAFT_CPUS`` or ``*``. Shuffle
-    partitions default to 2x cores in local mode (small enough to avoid
-    tiny-task overhead at test scale; AQE coalesces further at runtime).
+    partitions default to 2x cores, at least 8 (32 for ``*``): small
+    enough to avoid tiny-task overhead at test scale; AQE coalesces
+    further at runtime.
     """
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "*")
-    # SPARK_GRAFT_MASTER switches to a real (standalone) cluster master —
-    # used by the process-isolated N->4N scaling runs (bench.py
-    # --scaling-cluster, tools/standalone_cluster.py). Everything else in
-    # this config block is identical in both modes by design.
-    cluster_master = os.environ.get("SPARK_GRAFT_MASTER")
-    master = cluster_master or f"local[{cores}]"
     if shuffle_partitions is None:
         try:
-            total_cores = int(
-                os.environ.get("SPARK_GRAFT_MAX_CORES") if cluster_master else cores
-            )
-            shuffle_partitions = max(8, 2 * total_cores)
-        except (TypeError, ValueError):
+            shuffle_partitions = max(8, 2 * int(cores))
+        except ValueError:
             shuffle_partitions = 32
 
-    builder = (
-        SparkSession.builder.master(master)
+    spark = (
+        SparkSession.builder.master(f"local[{cores}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
@@ -52,10 +44,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config(
-            "spark.sql.execution.arrow.maxRecordsPerBatch",
-            os.environ.get("SPARK_ARROW_BATCH", "10000"),
-        )
+        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Web-document rows are heavy-tailed (KB typical, MB tail — the
         # reference caps bodies at 5 MB, crawler_twotier.go:57, and the
         # fixture corpus includes such pages). Row-count batch limits
@@ -67,20 +56,14 @@ def get_spark(
         #   maxBytesPerBatch=16m caps the batch regardless of row width
         #   (rows still cap at maxRecordsPerBatch for narrow tables —
         #   whichever trips first).
-        .config(
-            "spark.sql.execution.arrow.maxBytesPerBatch",
-            os.environ.get("SPARK_ARROW_MAX_BYTES", str(16 << 20)),
-        )
+        .config("spark.sql.execution.arrow.maxBytesPerBatch", str(16 << 20))
         # - Parquet vectorized reader: rows-only knob. 4096-row batches
         #   on a ~10 KB-avg text column reserve ~40 MB per column
         #   vector PER TASK (x32 slots = measured OOM during the
         #   1 M-page pipeline's normalize stage, which only re-reads a
         #   parquet it just wrote). 512 keeps typical web-text batches
         #   ~5 MB while narrow scans stay fully amortized.
-        .config(
-            "spark.sql.parquet.columnarReaderBatchSize",
-            os.environ.get("SPARK_PARQUET_BATCH_ROWS", "512"),
-        )
+        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
         # - File-scan partitions: the default 128 MB of COMPRESSED
         #   parquet is ~0.5-1 GB of heap once a text column
         #   decompresses and lands as UTF-16 strings. Map-only stages
@@ -94,19 +77,13 @@ def get_spark(
         #   AQE re-coalesces small partitions after shuffles, and the
         #   small sf fixtures are unaffected (they are below one
         #   partition either way).
-        .config(
-            "spark.sql.files.maxPartitionBytes",
-            os.environ.get("SPARK_FILES_MAX_PARTITION", str(16 << 20)),
-        )
+        .config("spark.sql.files.maxPartitionBytes", str(16 << 20))
         #   ...and the cap only bites if files CAN split: parquet
         #   row groups are the split unit, and the default 128 MB
         #   block size makes every interstage file one unsplittable
         #   row group. 16 MB row groups let the scan cap hold on the
         #   pipeline's own stage outputs.
-        .config(
-            "spark.hadoop.parquet.block.size",
-            os.environ.get("SPARK_PARQUET_BLOCK", str(16 << 20)),
-        )
+        .config("spark.hadoop.parquet.block.size", str(16 << 20))
         # - In-memory-cache build vectors: above this threshold Spark
         #   reserves required*ratio instead of doubling AND releases the
         #   vector after each batch — so one 5 MB-row batch doesn't pin
@@ -148,52 +125,7 @@ def get_spark(
         )
         .config("spark.ui.enabled", os.environ.get("SPARK_UI","false"))
         .config("spark.ui.showConsoleProgress", "false")
+        .getOrCreate()
     )
-    if cluster_master:
-        import sys
-
-        # one executor JVM per worker: executor.cores == the worker's
-        # advertised cores. Each executor gets its OWN heap/GC + direct-
-        # memory arena + python workers — the §1 sizing rationale
-        # (small ParallelGC heap, direct >= heap) applied per-executor.
-        exec_mem = os.environ.get("SPARK_GRAFT_EXEC_MEM", "6g")
-        builder = (
-            builder.config(
-                "spark.executor.cores", os.environ.get("SPARK_GRAFT_EXEC_CORES", "4")
-            )
-            .config("spark.executor.memory", exec_mem)
-            .config(
-                "spark.executor.extraJavaOptions",
-                # direct memory must track the heap (§1 rationale: netty/
-                # Arrow arenas force System.gc() storms when it runs out)
-                f"-XX:+UseParallelGC -XX:MaxDirectMemorySize={exec_mem}",
-            )
-            .config("spark.pyspark.python", sys.executable)
-            # measured both ways on the 500K-page wave (BENCH.md §3a):
-            # wait=0 helps the 1-executor config (+13%, driver-block
-            # locality) but caps the 4-executor config ~17% lower — a
-            # task scheduled off the corpus-cache executor re-fetches
-            # multi-GB html blocks every superstep. Keep Spark's 3s
-            # default; expose the knob for experiments.
-            .config(
-                "spark.locality.wait",
-                os.environ.get("SPARK_GRAFT_LOCALITY_WAIT", "3s"),
-            )
-            # the canonical straggler mitigation, exposed for the §3a
-            # barrier-straggler experiments; default off (duplicate
-            # speculative tasks on ONE box contend for the same bus /
-            # page cache they are meant to route around)
-            .config(
-                "spark.speculation",
-                os.environ.get("SPARK_GRAFT_SPECULATION", "false"),
-            )
-        )
-        max_cores = os.environ.get("SPARK_GRAFT_MAX_CORES")
-        if max_cores:
-            builder = builder.config("spark.cores.max", max_cores)
-        pyfiles = os.environ.get("SPARK_GRAFT_PYFILES")
-        if pyfiles:
-            builder = builder.config("spark.submit.pyFiles", pyfiles)
-    spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark

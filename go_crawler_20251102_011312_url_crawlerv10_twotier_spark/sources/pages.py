@@ -197,7 +197,7 @@ def recrawl_v2(
     of surviving pages get extra body text (changed bytes), ~1/removed_mod
     vanish (removed). No hrefs are added — only membership and body
     bytes move, which is the shape of a real refetch delta. Shared by
-    the incremental-pipeline tests and ``bench.py --incremental``."""
+    the incremental-pipeline tests and the BENCH.md §10 recrawl runs."""
     from pyspark.sql import functions as F
 
     bucket = F.pmod(F.xxhash64("url"), F.lit(100))

@@ -9,8 +9,8 @@ broadcast of the frontier — therefore crosses process boundaries
 exactly as on a multi-node cluster. The crawl result must equal the
 in-process library crawl row-for-row.
 
-Ports are offset from bench.py --scaling-cluster's defaults so the
-test never collides with a concurrently running scaling measurement.
+Ports are offset from StandaloneCluster's defaults (7077/8089) so the
+test never collides with a cluster started on those by hand.
 """
 
 from __future__ import annotations

@@ -220,8 +220,7 @@ def test_bloom_crawl_identical(spark, full):
     must be bit-for-bit the exact-join crawl: false positives fall
     through to the authoritative anti-join, false negatives are
     impossible (every seen key is OR-ed into its shard)."""
-    res = run_engine(spark, CrawlConfig(use_bloom=True, bloom_shards=8,
-                                        bloom_bits_per_shard=1 << 16))
+    res = run_engine(spark, CrawlConfig(use_bloom=True))
     got = {(r.url_norm, r.depth) for r in res.seen.collect()}
     assert got == full["seen"]
 
@@ -269,6 +268,46 @@ def test_every_config_knob_is_read():
         if not re.search(rf"\b(?:cfg|crawl_cfg)\.{f.name}\b", src)
     ]
     assert not unread, f"CrawlConfig fields nothing reads: {unread}"
+
+
+def test_every_env_knob_is_set_somewhere():
+    """The engine package reads exactly these environment variables,
+    each one set by something outside the package:
+
+    - SPARK_GRAFT_CPUS: local cores; the tier-1 command and the test
+      session set it to the host's vCPU count.
+    - SPARK_UI: perfbench's traced run turns on Spark's REST API.
+    - SPARK_DRIVER_MEM: driver heap, sized to the host of a local run.
+    - SPARK_DRIVER_JAVA_OPTS: driver GC / direct-memory flags, same.
+    - SPARK_GRAFT_SF_DIR: where the driver's fixture tables live.
+
+    An override that nothing sets is a second code path nothing runs;
+    a new one belongs here with its reason."""
+    import pathlib
+    import re
+
+    import go_crawler_20251102_011312_url_crawlerv10_twotier_spark as eng
+
+    src = "\n".join(
+        f.read_text() for f in pathlib.Path(eng.__file__).parent.rglob("*.py")
+    )
+    names = re.findall(
+        r"""os\.(?:environ\.get\(|environ\[|getenv\()\s*["']([A-Za-z0-9_]+)["']""",
+        src,
+    )
+    # every environ/getenv access must name its variable literally
+    assert len(names) == len(re.findall(r"\b(?:environ|getenv)\b", src))
+    kept = {
+        "SPARK_GRAFT_CPUS",
+        "SPARK_UI",
+        "SPARK_DRIVER_MEM",
+        "SPARK_DRIVER_JAVA_OPTS",
+        "SPARK_GRAFT_SF_DIR",
+    }
+    read = set(names)
+    assert read == kept, (
+        f"extra: {sorted(read - kept)}; missing: {sorted(kept - read)}"
+    )
 
 
 def test_checkpoint_storage_bounded(spark):

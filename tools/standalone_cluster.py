@@ -1,20 +1,16 @@
-"""Localhost Spark standalone cluster for process-isolated scaling runs.
+"""Localhost Spark standalone cluster: tests/test_cluster.py's cluster.
 
-The north_rule's scaling criterion compares N vs 4N *executors*. A
-``local[N]`` vs ``local[4N]`` pair measures threads inside ONE JVM —
-one heap, one GC, one python-worker pool — which BENCH.md §3 showed is
-the dominant confounder on this box. This module stands up a real
-standalone cluster on 127.0.0.1 (1 master + W worker JVMs, each worker
-hosting one executor JVM with its own heap/GC/python workers), so the
-N→4N comparison isolates processes the way a multi-node cluster does.
-Only the memory bus, disk, and physical cores remain shared — the
-irreducible single-box residue, quantified separately in BENCH.md §3.
+Stands up a real standalone cluster on 127.0.0.1 (1 master + W worker
+JVMs, each worker hosting one executor JVM with its own heap/GC/python
+workers), so a ``spark-submit --master`` run crosses process boundaries
+the way a multi-node cluster does. Only the memory bus, disk and
+physical cores remain shared. The N vs 4N executor scaling runs that
+used it are recorded in BENCH.md §3a and §13b.
 
 Usage (context manager keeps cleanup unconditional):
 
-    with StandaloneCluster(n_workers=4, cores_per_worker=4) as cl:
-        env["SPARK_GRAFT_MASTER"] = cl.master_url
-        ... run driver subprocess ...
+    with StandaloneCluster(n_workers=2, cores_per_worker=2) as cl:
+        subprocess.run(["spark-submit", "--master", cl.master_url, ...])
 """
 
 from __future__ import annotations
@@ -47,7 +43,6 @@ class StandaloneCluster:
         worker_mem: str = "14g",
         master_port: int = 7077,
         webui_port: int = 8089,
-        pin_cpus: bool = False,
     ) -> None:
         self.n_workers = n_workers
         self.cores_per_worker = cores_per_worker
@@ -55,21 +50,8 @@ class StandaloneCluster:
         self.master_port = master_port
         self.webui_port = webui_port
         self.master_url = f"spark://127.0.0.1:{master_port}"
-        # CPU-fair mode: worker i (daemon + the executor JVM and
-        # pyspark.daemon workers it spawns, which inherit affinity) is
-        # tasksetted onto the DISTINCT vCPU slice
-        # [i*cores, (i+1)*cores) — every worker gets identical silicon
-        # and none can borrow the box's idle cores. Without pinning, a
-        # 1-worker run free-rides on ~30 idle vCPUs (GC, IO, python
-        # workers), inflating the small-N denominator of the N->4N
-        # efficiency in a way no real per-node deployment reproduces.
-        self.pin_cpus = pin_cpus
         self._procs: list[subprocess.Popen] = []
         self._tmp: str | None = None
-
-    def worker_cpu_slice(self, i: int) -> str:
-        c = self.cores_per_worker
-        return f"{i * c}-{(i + 1) * c - 1}"
 
     # -- lifecycle -----------------------------------------------------
     def start(self, timeout: float = 60.0) -> None:
@@ -96,14 +78,8 @@ class StandaloneCluster:
         self._wait_master(timeout)
         for i in range(self.n_workers):
             wenv = dict(env, SPARK_WORKER_DIR=os.path.join(self._tmp, f"w{i}"))
-            pin = (
-                ["taskset", "-c", self.worker_cpu_slice(i)]
-                if self.pin_cpus
-                else []
-            )
             self._spawn(
-                pin
-                + [
+                [
                     SPARK_CLASS,
                     "org.apache.spark.deploy.worker.Worker",
                     self.master_url,
