@@ -880,28 +880,12 @@ def q_tier2_extract_text(spark, sf_dir):
 
 
 def _drive_download_state(spark, sf_dir, store=None):
-    """S6/J2/J3/C5 superstep loop shared by both download gates.
-
-    Lineage discipline (the 15x lesson from round 1 still holds — an
-    uncut log compounds): ONE eager cut per superstep. Closed rows
-    and the next retry queue both derive from the same probed frame,
-    so they materialize together in one localCheckpoint (status NULL
-    marks pending rows) and split with cheap filters over the
-    checkpointed block; the log is then a shallow union of
-    already-materialized delta blocks — never re-checkpointed, never
-    recomputed.
-
-    CLOSED (round 4, VERDICT r03 #6): driving TWO supersteps per cut
-    — composing the transitions lazily and materializing both deltas
-    + the batch-end queue in one action — was A/B-measured WORSE with
-    dose-response: 5.5-7.1 s at batch=1 vs 7.8-8.8 s at batch=2 vs
-    11.3 s at batch=3 (sf0.1, warm local[32]). The t+1 transition
-    references pending/log three times, so each un-materialized prior
-    transition (whose corpus-probe join is the expensive stage)
-    re-evaluates ~3x inside the batch — costing more than the saved
-    job barrier. The residual ~0.7 s/superstep is fixed
-    shuffle/stage latency that amortizes at real batch sizes;
-    ``SPARK_GRAFT_DL_BATCH`` keeps the experiment replayable.
+    """S6/J2/J3/C5 superstep loop shared by both download gates: the
+    crawl loop's transition (operators/download_log.py), cut once per
+    superstep — an uncut state compounds its lineage (the 15x lesson
+    from round 1). With a store, each superstep commits the delta and
+    queue filtered from that cut. Batching several supersteps per cut
+    was measured slower (VERDICT r03 #6).
 
     The coalesce before the cut is load-bearing: the carriers are
     NARROW transforms of checkpointed RDDs (AQE only coalesces
@@ -909,60 +893,27 @@ def _drive_download_state(spark, sf_dir, store=None):
     superstep — measured 26 -> 59,024 partitions over 8 supersteps,
     with the final one spending 67 s scheduling empty tasks.
     """
-    from functools import reduce
-
     disc = _synth(spark, sf_dir, DL_DISCOVERY_SQL).localCheckpoint(eager=True)
     corpus_keys = _synth(spark, sf_dir, DL_CORPUS_SQL).localCheckpoint(eager=True)
-    pending = spark.createDataFrame([], download_log.PENDING_SCHEMA)
-    log = spark.createDataFrame([], download_log.LOG_SCHEMA)
+    state = spark.createDataFrame([], download_log.LOG_SCHEMA)
     empty_seen = spark.createDataFrame([], "url_norm string")
-    # batch>1 = the closed experiment above (kept replayable); the
-    # store path is always 1: it persists every superstep's queue
-    # snapshot anyway, so there is no barrier to save
-    batch = 1 if store is not None else int(
-        os.environ.get("SPARK_GRAFT_DL_BATCH", "1")
-    )
-    deltas = []
-    it = 0
-    while it < DL_ITERS:
-        steps = min(batch, DL_ITERS - it)
-        cur_pending, cur_log = pending, log
-        lazy = []
-        for j in range(steps):
-            new_docs = disc.filter(F.col("it") == it + j).select("url")
-            delta, cur_pending = download_log.advance_download_state(
-                new_docs, cur_pending, cur_log, corpus_keys, it + j,
-                DL_MAX_RETRIES,
+    ncoal = max(4, spark.sparkContext.defaultParallelism // 2)
+    for it in range(DL_ITERS):
+        new_docs = disc.filter(F.col("it") == it).select("url")
+        state = (
+            download_log.advance_download_state(
+                new_docs, state, corpus_keys, it, DL_MAX_RETRIES
             )
-            lazy.append(delta)
-            cur_log = cur_log.unionByName(delta)
-        ncoal = max(4, spark.sparkContext.defaultParallelism // 2)
-        both = reduce(DataFrame.unionByName, lazy).unionByName(
-            cur_pending.select(
-                "url",
-                F.lit(None).cast("string").alias("status"),
-                "retry",
-                F.lit(-1).alias("iter"),
-            )
-        ).coalesce(ncoal)
-        # ONE cut per batch: delta rows carry their superstep in
-        # ``iter``, pending rows are status-NULL — all split with
-        # cheap filters over the single checkpointed block; the log
-        # stays a shallow union of materialized blocks, never
-        # recomputed (the round-1 15x lesson still holds)
-        both = both.localCheckpoint(eager=True)
-        for j in range(steps):
-            delta_cut = both.filter(F.col("iter") == it + j)
-            deltas.append(delta_cut)
-        pending = both.filter(F.col("status").isNull()).select("url", "retry")
-        log = reduce(DataFrame.unionByName, deltas)
+            .coalesce(ncoal)
+            .localCheckpoint(eager=True)
+        )
         if store is not None:
+            delta, pending = download_log.to_tables(state, it)
             store.write_iter(
                 it, empty_seen, empty_seen,
-                downloads_delta=deltas[-1], downloads_pending=pending,
+                downloads_delta=delta, downloads_pending=pending,
             )
-        it += steps
-    return log, pending
+    return state
 
 
 def q_download_state(spark, sf_dir):
@@ -972,8 +923,8 @@ def q_download_state(spark, sf_dir):
     crawl loop runs (plans/frontier.py), factored in
     operators/download_log.py; the oracle is the closed-form per-URL
     outcome of the fixture's discovery/corpus arithmetic."""
-    log, pending = _drive_download_state(spark, sf_dir)
-    return download_log.finalize_download_log(log, pending, DL_ITERS - 1)
+    state = _drive_download_state(spark, sf_dir)
+    return download_log.finalize_download_log(state, DL_ITERS - 1)
 
 
 def q_download_state_store(spark, sf_dir):
@@ -992,9 +943,11 @@ def q_download_state_store(spark, sf_dir):
 
     store = SnapshotStore(tempfile.mkdtemp(prefix="dlstore_"))
     _drive_download_state(spark, sf_dir, store=store)
-    log = store.merged_downloads(spark, DL_ITERS - 1)
-    pending = store.read_pending(spark, DL_ITERS - 1)
-    return download_log.finalize_download_log(log, pending, DL_ITERS - 1)
+    last = DL_ITERS - 1
+    state = download_log.from_tables(
+        store.merged_downloads(spark, last), store.read_pending(spark, last), last
+    )
+    return download_log.finalize_download_log(state, last)
 
 
 def q_link_density(spark, sf_dir):

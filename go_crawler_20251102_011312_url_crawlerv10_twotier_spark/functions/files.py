@@ -69,11 +69,6 @@ def format_bytes_py(n: int) -> str:
 
 
 @F.pandas_udf(T.StringType())
-def sanitize_filename(name: pd.Series) -> pd.Series:
-    return name.map(lambda v: sanitize_filename_py(v) if v is not None else None)
-
-
-@F.pandas_udf(T.StringType())
 def extract_filename(url: pd.Series, cd: pd.Series, suffix: pd.Series) -> pd.Series:
     return pd.Series(
         [

@@ -19,13 +19,6 @@ MAX_BODY_SIZE = 5 * 1024 * 1024
 MAX_RETRIES = 3
 
 
-def depth_ok(depth) -> Column:
-    """F1: a page at depth d spawns children only if d < MaxDepth
-    (crawler_twotier.go:194); children get depth d+1 (:199)."""
-    depth = F.col(depth) if isinstance(depth, str) else depth
-    return depth < F.lit(MAX_DEPTH)
-
-
 def host_present(host) -> Column:
     """F2: drop unparseable / host-less URLs (crawler_twotier.go:187-190)."""
     host = F.col(host) if isinstance(host, str) else host
@@ -48,19 +41,6 @@ def body_cap(html) -> Column:
         )
     )
     return F.when(F.octet_length(html) > MAX_BODY_SIZE, cut).otherwise(html)
-
-
-def status_200(status) -> Column:
-    """F5: downloads succeed only on HTTP 200 (downloader.go:200-202)."""
-    status = F.col(status) if isinstance(status, str) else status
-    return status == F.lit(200)
-
-
-def retry_ok(retry) -> Column:
-    """C5: at most MaxRetries re-attempts (config.go:34,
-    downloader.go:159-172); retries loop through iterations as data."""
-    retry = F.col(retry) if isinstance(retry, str) else retry
-    return retry <= F.lit(MAX_RETRIES)
 
 
 # P4 href skip rules — scalar cores shared with the extract UDFs and the

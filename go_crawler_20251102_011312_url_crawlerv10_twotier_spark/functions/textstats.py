@@ -31,14 +31,6 @@ LANG_MARKERS: dict[str, str] = {
 LANG_PREFERENCE = ("en", "de", "fr", "es")  # deterministic tie-break order
 
 
-def lang_marker_counts(text) -> list[Column]:
-    text = F.col(text) if isinstance(text, str) else text
-    return [
-        F.regexp_count(F.lower(text), F.lit(pat)).alias(f"n_{lang}")
-        for lang, pat in LANG_MARKERS.items()
-    ]
-
-
 def lang_id(text) -> Column:
     """argmax over marker counts; 'und' when all zero; ties resolved
     by LANG_PREFERENCE order via first-match CASE semantics:

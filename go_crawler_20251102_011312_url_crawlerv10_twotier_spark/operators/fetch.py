@@ -61,11 +61,6 @@ def extract_text_py(html: bytes | str | None) -> str | None:
     return root.text()
 
 
-@F.pandas_udf(T.StringType())
-def extract_text(html: pd.Series) -> pd.Series:
-    return html.map(extract_text_py)
-
-
 def salted_host_repartition(
     df: DataFrame, host_col: str = "host", salts: int = 16, partitions: int | None = None
 ) -> DataFrame:

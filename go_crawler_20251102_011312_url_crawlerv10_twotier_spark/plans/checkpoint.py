@@ -24,7 +24,7 @@ every committed snapshot is immutable. A ``_meta.json`` without
 ``snaps`` raises, and none of its dirs is deleted.
 
 ``downloads`` deltas are MERGE-shaped: the state machine closes each
-url exactly once (J2 anti-joins the log), so the deltas are disjoint
+url exactly once (J2 anti-joins the state), so the deltas are disjoint
 and their union (``merged_downloads``) IS the table an Iceberg
 ``MERGE INTO`` of each delta would produce.
 

@@ -9,7 +9,7 @@ declarative plan per iteration:
       --route (O1)--> fast|slow --extract (E1/E2)--> links + docs
       --normalize (P1)--> candidates --dedup + anti-join seen (J1)-->
       new frontier; docs --anti-join downloads (J2) + retry (C5)-->
-      download state
+      download state (one frame: closed rows + status-NULL retry queue)
 
 Semantics vs the reference (SURVEY.md §5.2, §7):
 * seen is keyed on the COMPAT-normalized URL (utils/utils.go:14-18)
@@ -48,6 +48,10 @@ Scale notes (100 TB / 10^10 frontier):
   the download branch and the superstep totals all read it. With a
   snapshot store, its per-partition aggregates (north_rule lineage)
   are committed as superstep K's ``metrics`` (``read_metrics``).
+* the download state is one frame, cut once per superstep that runs
+  its transition (docs found or retries queued); the store's
+  ``downloads`` delta and ``pending`` queue are filters of that cut
+  and are committed only on those supersteps.
 """
 
 from __future__ import annotations
@@ -318,8 +322,7 @@ def crawl(
     initial_seen: DataFrame | None = None,
     start_iter: int = 0,
     host_ranks: DataFrame | None = None,
-    initial_dl_log: DataFrame | None = None,
-    initial_dl_pending: DataFrame | None = None,
+    initial_downloads: DataFrame | None = None,
     redirects: DataFrame | None = None,
 ) -> CrawlResult:
     cfg = cfg or CrawlConfig()
@@ -434,18 +437,23 @@ def crawl(
         seen = frontier.select(
             "url_norm", "url", "host", "depth", F.lit(0).alias("iter")
         ).localCheckpoint(eager=True)
-    if initial_dl_pending is not None:
-        dl_pending = initial_dl_pending.select("url", "retry").localCheckpoint(eager=True)
-        n_pending_dl0 = dl_pending.count()
+    ncoal = max(4, spark.sparkContext.defaultParallelism)
+
+    def cut_downloads(state: DataFrame, name: str) -> tuple[DataFrame, int]:
+        """The download state's one cut; the queue length rides it."""
+        obs = Observation(name)
+        state = (
+            state.select("url", "status", "retry", "iter")
+            .observe(obs, F.count(F.when(download_log.queued(), 1)).alias("n"))
+            .coalesce(ncoal)
+            .localCheckpoint(eager=True)
+        )
+        return state, int(obs.get["n"])
+
+    if initial_downloads is not None:
+        dl, n_pending_dl = cut_downloads(initial_downloads, "dl0")
     else:
-        dl_pending = spark.createDataFrame([], "url string, retry int")
-        n_pending_dl0 = 0
-    if initial_dl_log is not None:
-        dl_log = initial_dl_log.select(
-            "url", "status", "retry", "iter"
-        ).localCheckpoint(eager=True)
-    else:
-        dl_log = spark.createDataFrame([], "url string, status string, retry int, iter int")
+        dl, n_pending_dl = spark.createDataFrame([], download_log.LOG_SCHEMA), 0
     metrics: list[dict] = []
 
     bloom_shards = None
@@ -459,12 +467,13 @@ def crawl(
         ).localCheckpoint(eager=True)
 
     if store and start_iter == 0:
-        store.write_iter(0, seen, frontier, dl_log)
+        closed = None
+        if initial_downloads is not None:
+            closed = dl.filter(~download_log.queued())
+        store.write_iter(0, seen, frontier, closed)
 
     it = start_iter
     n_frontier = frontier.count()
-    n_pending_dl = n_pending_dl0
-    ncoal = max(4, spark.sparkContext.defaultParallelism)
     while it < cfg.max_iterations:
         t0 = time.time()
         if (
@@ -603,27 +612,21 @@ def crawl(
 
         # J2 + C5: download-state machine, retries as data.
         # Skipped entirely when this iteration produced no docs and no
-        # retries are pending — the common case on link-only strata.
-        dl_delta = None
+        # retries are pending — the common case on link-only strata;
+        # the store then carries the unchanged queue forward.
+        dl_delta = dl_queue = None
         if tot["docs"] > 0 or n_pending_dl > 0:
-            new_docs = ext.select(F.explode("docs").alias("url"))
-            delta, next_pending = download_log.advance_download_state(
-                new_docs,
-                dl_pending,
-                dl_log,
-                corpus.select(F.col("url_norm").alias("dl_norm")),
-                it,
-                cfg.max_retries,
+            dl, n_pending_dl = cut_downloads(
+                download_log.advance_download_state(
+                    ext.select(F.explode("docs").alias("url")),
+                    dl,
+                    corpus.select(F.col("url_norm").alias("dl_norm")),
+                    it,
+                    cfg.max_retries,
+                ),
+                f"iter{it}_dl",
             )
-            dl_obs = Observation(f"iter{it}_dl")
-            dl_pending = (
-                next_pending.observe(dl_obs, F.count(F.lit(1)).alias("n"))
-                .coalesce(ncoal)
-                .localCheckpoint(eager=True)
-            )
-            n_pending_dl = int(dl_obs.get["n"])
-            dl_delta = delta.coalesce(ncoal).localCheckpoint(eager=True)
-            dl_log = dl_log.unionByName(dl_delta).coalesce(ncoal).localCheckpoint(eager=True)
+            dl_delta, dl_queue = download_log.to_tables(dl, it)
 
         seen_delta = new.select("url_norm", "url", "host", "depth", F.lit(it).alias("iter"))
         # cut every superstep: an every-4th-cadence variant was measured
@@ -678,7 +681,7 @@ def crawl(
             )
             store.write_iter(
                 it, seen_delta, frontier, dl_delta, met_df,
-                downloads_pending=dl_pending,
+                downloads_pending=dl_queue,
             )
             if cfg.snapshot_keep is not None:
                 store.expire_snapshots(cfg.snapshot_keep)
@@ -706,7 +709,7 @@ def crawl(
             break  # frontier exhausted (deferred is empty without budgets)
 
     # mark still-pending downloads (queue drain state, C6)
-    downloads = download_log.finalize_download_log(dl_log, dl_pending, it)
+    downloads = download_log.finalize_download_log(dl, it)
 
     corpus.unpersist()
     return CrawlResult(seen=seen, downloads=downloads, metrics=metrics, iterations=it)
@@ -749,15 +752,17 @@ def resume(
 
     seen0 = store.read_seen(spark, last)
     frontier0 = store.read_frontier(spark, last)
-    dl0 = store.merged_downloads(spark, last)
-    pending0 = store.read_pending(spark, last)
+    dl0 = download_log.from_tables(
+        store.merged_downloads(spark, last), store.read_pending(spark, last), last
+    )
 
     # re-enter the loop with the snapshot's FULL state injected — seen
-    # set, frontier, merged download log AND the retry queue: the
-    # continuation anti-joins against everything already visited/closed
-    # and keeps retrying what was in flight, so the final state
-    # (including downloads) is identical to an uninterrupted run
-    # (tested in tests/test_frontier.py::test_resume_identical).
+    # set, frontier and the download state (merged closed rows AND the
+    # retry queue): the continuation anti-joins against everything
+    # already visited/closed and keeps retrying what was in flight, so
+    # the final state (including downloads) is identical to an
+    # uninterrupted run (tested in tests/test_frontier.py::
+    # test_resume_identical).
     return crawl(
         spark,
         pages,
@@ -767,7 +772,6 @@ def resume(
         html_col=html_col,
         initial_seen=seen0,
         start_iter=last,
-        initial_dl_log=dl0,
-        initial_dl_pending=pending0,
+        initial_downloads=dl0,
         redirects=redirects,
     )

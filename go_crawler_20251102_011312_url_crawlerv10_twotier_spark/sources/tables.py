@@ -7,32 +7,8 @@ documents embeddings, one parquet file per table under
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
-TABLE_NAMES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:
-    """Register each table as a temp view (mirrors the DuckDB oracle's
-    pre-registered views so the same SQL text runs on both engines)."""
-    for name in names:
-        load(spark, sf_dir, name).createOrReplaceTempView(name)

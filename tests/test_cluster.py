@@ -8,9 +8,6 @@ the --py-files zip. Every stage — scan, Arrow UDF extract, shuffles,
 broadcast of the frontier — therefore crosses process boundaries
 exactly as on a multi-node cluster. The crawl result must equal the
 in-process library crawl row-for-row.
-
-Ports are offset from StandaloneCluster's defaults (7077/8089) so the
-test never collides with a cluster started on those by hand.
 """
 
 from __future__ import annotations
@@ -57,13 +54,7 @@ def test_spark_submit_on_standalone_cluster(spark, tmp_path):
 
     env = dict(os.environ)
     env.pop("PYTHONPATH", None)  # imports must come from --py-files only
-    with StandaloneCluster(
-        n_workers=2,
-        cores_per_worker=2,
-        worker_mem="3g",
-        master_port=7177,
-        webui_port=8289,
-    ) as cl:
+    with StandaloneCluster(n_workers=2) as cl:
         proc = subprocess.run(
             [
                 _spark_submit(),

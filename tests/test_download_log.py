@@ -16,30 +16,20 @@ def _corpus_keys(spark, urls):
     return spark.createDataFrame([(u,) for u in urls], "dl_norm string")
 
 
-def _empty(spark):
-    return (
-        spark.createDataFrame([], dl.PENDING_SCHEMA),
-        spark.createDataFrame([], dl.LOG_SCHEMA),
-    )
-
-
 def _run(spark, discoveries, corpus_urls, n_iters, max_retries):
     """Drive the machine: discoveries = {iter: [raw urls]}."""
-    pending, log = _empty(spark)
+    state = spark.createDataFrame([], dl.LOG_SCHEMA)
     keys = _corpus_keys(spark, corpus_urls)
     for it in range(n_iters):
         new = spark.createDataFrame(
             [(u,) for u in discoveries.get(it, [])], "url string"
         )
-        delta, pending = dl.advance_download_state(
-            new, pending, log, keys, it, max_retries
-        )
-        # checkpoint both, as the operator's contract asks of its caller
-        # (the crawl loop does the same): without the cut each step's
-        # plan holds two copies of the last one, so it doubles per step
-        log = log.unionByName(delta).localCheckpoint(eager=True)
-        pending = pending.localCheckpoint(eager=True)
-    return dl.finalize_download_log(log, pending, n_iters - 1)
+        # one cut per step, as the crawl loop does: without it each
+        # step's plan holds three copies of the last one
+        state = dl.advance_download_state(
+            new, state, keys, it, max_retries
+        ).localCheckpoint(eager=True)
+    return dl.finalize_download_log(state, n_iters - 1)
 
 
 def test_hit_closes_done_at_discovery_iter(spark):
@@ -119,15 +109,13 @@ def test_retry_recovers_when_corpus_gains_key(spark):
     """A URL that misses at first but appears in the corpus later (the
     reference's transient-error retry path, C5) closes done with the
     accrued retry count."""
-    pending, log = _empty(spark)
+    state = spark.createDataFrame([], dl.LOG_SCHEMA)
     disc = spark.createDataFrame([("https://h.example/x.pdf",)], "url string")
     none = spark.createDataFrame([], "url string")
     empty_keys = _corpus_keys(spark, [])
-    delta0, pending = dl.advance_download_state(disc, pending, log, empty_keys, 0, 3)
-    log = log.unionByName(delta0)
+    state = dl.advance_download_state(disc, state, empty_keys, 0, 3)
     keys = _corpus_keys(spark, ["https://h.example/x.pdf"])
-    delta1, pending = dl.advance_download_state(none, pending, log, keys, 1, 3)
-    log = log.unionByName(delta1)
-    rows = log.collect()
+    state = dl.advance_download_state(none, state, keys, 1, 3)
+    # one row, closed: nothing left in the queue (status NULL)
+    rows = state.collect()
     assert [(r.status, r.retry, r.iter) for r in rows] == [("done", 1, 1)]
-    assert pending.count() == 0

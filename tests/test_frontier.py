@@ -271,15 +271,15 @@ def test_every_config_knob_is_read():
 
 
 def test_every_env_knob_is_set_somewhere():
-    """The engine package reads exactly these environment variables,
-    each one set by something outside the package:
+    """The engine package and the gate entry point (``__spark_entry__.py``)
+    read exactly these environment variables, each one set by
+    something outside them:
 
     - SPARK_GRAFT_CPUS: local cores; the tier-1 command and the test
       session set it to the host's vCPU count.
     - SPARK_UI: perfbench's traced run turns on Spark's REST API.
     - SPARK_DRIVER_MEM: driver heap, sized to the host of a local run.
     - SPARK_DRIVER_JAVA_OPTS: driver GC / direct-memory flags, same.
-    - SPARK_GRAFT_SF_DIR: where the driver's fixture tables live.
 
     An override that nothing sets is a second code path nothing runs;
     a new one belongs here with its reason."""
@@ -288,9 +288,9 @@ def test_every_env_knob_is_set_somewhere():
 
     import go_crawler_20251102_011312_url_crawlerv10_twotier_spark as eng
 
-    src = "\n".join(
-        f.read_text() for f in pathlib.Path(eng.__file__).parent.rglob("*.py")
-    )
+    pkg = pathlib.Path(eng.__file__).parent
+    files = [*pkg.rglob("*.py"), pkg.parent / "__spark_entry__.py"]
+    src = "\n".join(f.read_text() for f in files)
     names = re.findall(
         r"""os\.(?:environ\.get\(|environ\[|getenv\()\s*["']([A-Za-z0-9_]+)["']""",
         src,
@@ -302,7 +302,6 @@ def test_every_env_knob_is_set_somewhere():
         "SPARK_UI",
         "SPARK_DRIVER_MEM",
         "SPARK_DRIVER_JAVA_OPTS",
-        "SPARK_GRAFT_SF_DIR",
     }
     read = set(names)
     assert read == kept, (

@@ -65,15 +65,49 @@ def _rows(df):
     return None if df is None else sorted(tuple(r) for r in df.collect())
 
 
+def _iters(root, table):
+    """Supersteps K with a ``<table>/<K>-<uuid>`` dir on disk."""
+    return sorted(
+        int(d.split(os.sep)[1].split("-")[0])
+        for d in _dirs(root)
+        if d.split(os.sep)[0] == table
+    )
+
+
 @pytest.fixture(scope="module")
 def ck_run(spark, tmp_path_factory):
     ck = str(tmp_path_factory.mktemp("ck"))
     res = _run(spark, CrawlConfig(checkpoint_dir=ck))
-    return ck, _state(res)
+    # the store as the crawl left it, before any test's maintenance
+    committed = {t: _iters(ck, t) for t in ("downloads", "pending")}
+    return ck, _state(res), committed, res.metrics
+
+
+def test_download_tables_committed_only_when_moved(ck_run):
+    """The loop commits ``downloads``/``pending`` only on supersteps
+    that ran the download transition; the others carry the queue
+    forward. On the quirks crawl every doc misses the corpus, so a doc
+    found at superstep d is attempted at d..d+MAX_RETRIES and the
+    transition runs on exactly those supersteps."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.functions.predicates import (
+        MAX_RETRIES,
+    )
+
+    _, _, committed, metrics = ck_run
+    engaged = sorted(
+        {
+            k
+            for m in metrics
+            if m["docs"] > 0
+            for k in range(m["iter"], m["iter"] + MAX_RETRIES + 1)
+        }
+    )
+    assert len(metrics) == 14 and len(engaged) == 4
+    assert committed == {"downloads": engaged, "pending": engaged}
 
 
 def test_expire_then_compact_preserve_retained_resume(spark, ck_run):
-    ck, final = ck_run
+    ck, final, _, _ = ck_run
     store = SnapshotStore(ck)
     last = store.latest_iter()
     assert last is not None and last >= 4  # quirks chain runs 14 iters
@@ -84,7 +118,10 @@ def test_expire_then_compact_preserve_retained_resume(spark, ck_run):
     h = store.expire_snapshots(keep_last=3)
     assert h == last - 2 == store.horizon()
     assert _count(ck, "frontier") == 3
-    assert _count(ck, "pending") == 3
+    # retained entries may share one carried-forward queue dir
+    named = {store._manifest()["snaps"][k]["pending"] for k in range(h, last + 1)}
+    assert {d for d in _dirs(ck) if d.startswith("pending" + os.sep)} == named
+    assert len(named) <= 3
     # the horizon's retry queue is still named by its entry, not lost
     assert _rows(store.read_pending(spark, h)) == pending_at_h
     # delta tables untouched by expire
@@ -110,7 +147,7 @@ def test_expire_then_compact_preserve_retained_resume(spark, ck_run):
 
 
 def test_snapshot_keep_bounds_store_in_the_loop(spark, ck_run, tmp_path):
-    _, final = ck_run
+    _, final, _, _ = ck_run
     ck = str(tmp_path / "ck2")
     res = _run(spark, CrawlConfig(checkpoint_dir=ck, snapshot_keep=2))
     assert _state(res) == final  # maintenance never changes the crawl
@@ -347,7 +384,7 @@ def test_resume_after_injected_crash(spark, ck_run, tmp_path, monkeypatch):
     """Crawl level: a crash between the data writes of superstep 3 and
     its manifest replace leaves superstep 2 committed; resume lands on
     the uninterrupted state and leaves no orphaned directory."""
-    _, final = ck_run
+    _, final, _, _ = ck_run
     ck = str(tmp_path / "ck")
     with monkeypatch.context() as mp:
         _inject(mp, 4, only=("replace",))  # commits 0, 1, 2 succeed

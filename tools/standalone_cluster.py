@@ -9,7 +9,7 @@ used it are recorded in BENCH.md §3a and §13b.
 
 Usage (context manager keeps cleanup unconditional):
 
-    with StandaloneCluster(n_workers=2, cores_per_worker=2) as cl:
+    with StandaloneCluster(n_workers=2) as cl:
         subprocess.run(["spark-submit", "--master", cl.master_url, ...])
 """
 
@@ -36,20 +36,16 @@ class StandaloneCluster:
     ``spark.executor.cores == cores_per_worker``.
     """
 
-    def __init__(
-        self,
-        n_workers: int,
-        cores_per_worker: int = 4,
-        worker_mem: str = "14g",
-        master_port: int = 7077,
-        webui_port: int = 8089,
-    ) -> None:
+    cores_per_worker = 2
+    worker_mem = "3g"
+    # offset from Spark's standalone defaults (7077/8080) so the
+    # cluster never collides with one started on those by hand
+    master_port = 7177
+    webui_port = 8289
+
+    def __init__(self, n_workers: int) -> None:
         self.n_workers = n_workers
-        self.cores_per_worker = cores_per_worker
-        self.worker_mem = worker_mem
-        self.master_port = master_port
-        self.webui_port = webui_port
-        self.master_url = f"spark://127.0.0.1:{master_port}"
+        self.master_url = f"spark://127.0.0.1:{self.master_port}"
         self._procs: list[subprocess.Popen] = []
         self._tmp: str | None = None
 
