@@ -46,7 +46,6 @@ def parse_args(argv):
                    help="enforce robots.txt rules found in the corpus")
     p.add_argument("--use-bloom", action="store_true",
                    help="route the seen probe through the sharded-Bloom prefilter")
-    p.add_argument("--politeness-salts", type=int, default=16)
     p.add_argument("--corpus-pre-keyed", action="store_true",
                    help="pages table is already (url_norm, html) — normalized,"
                    " body-capped, unique (e.g. a bucketed corpus written by"
@@ -96,7 +95,6 @@ def main(argv=None) -> int:
         max_iterations=args.max_iterations,
         budget_per_host=args.budget_per_host,
         global_budget=args.global_budget,
-        politeness_salts=args.politeness_salts,
         checkpoint_dir=args.checkpoint_dir,
         snapshot_keep=args.snapshot_keep,
         respect_robots=args.respect_robots,

@@ -77,9 +77,10 @@ def resolve_bloom_sizing(
     bit positions both depend on (n_shards, bits_per_shard), and a
     probe with mismatched sizing reads the wrong bits — which breaks
     the no-false-negative guarantee the prefilter's exactness rests
-    on. Resolve once (bloom_prefilter does; the crawl loop resolves at
-    start and reuses across increments) and pass the pair explicitly
-    to every build/merge/probe call.
+    on. Resolve once per build (bloom_prefilter does; the crawl loop
+    resolves from the current seen count in each superstep that
+    probes) and pass the pair explicitly to that build's merge/probe
+    calls.
 
     Broadcast budget: total state = n_shards x bits_per_shard / 8
     bytes ~ 1.25 bytes/key at the default — at 10^10 keys that is
@@ -168,8 +169,8 @@ def bloom_probe_broadcast(
     collapse). Probing indexes the packed bytes directly — no
     million-bit unpack per batch either.
 
-    A candidate whose shard is absent is definitely new (that shard
-    holds no keys yet) — relevant for incrementally-built tables.
+    A candidate whose shard is absent is definitely new (no seen key
+    hashed to that shard, so the build emitted no row for it).
 
     Returns (definitely_new, maybe_seen).
     """
@@ -224,11 +225,11 @@ def bloom_probe_shards(
 
 
 def merge_bloom_shards(a: DataFrame, b: DataFrame) -> DataFrame:
-    """Bitwise-OR two shard tables (incremental maintenance: OR the
-    delta's shards into the standing state instead of rebuilding over
-    the full seen set every iteration — at 10^10 seen keys the rebuild
-    is a full-table pass, the merge touches only ~n_shards x bits/8
-    bytes)."""
+    """Bitwise-OR two shard tables built with the same sizing pair:
+    the union of their key sets, for a caller that keeps a standing
+    table and adds deltas to it (the merge touches only ~n_shards x
+    bits/8 bytes). The crawl loop keeps no such table: it builds one
+    from the current seen set in each superstep that probes."""
 
     def orop(pdf: pd.DataFrame) -> pd.DataFrame:
         arrs = [np.frombuffer(x, dtype=np.uint8) for x in pdf["bloom"]]

@@ -38,7 +38,9 @@ Scale notes (100 TB / 10^10 frontier):
 * seen grows monotonically and never reaches the driver: candidate
   dedup is a shuffle on url_norm, the seen probe is a left-anti join
   (Spark's runtime Bloom-filter join pruning is enabled in
-  session.py; explicit per-shard blooms live in operators/dedup.py).
+  session.py). With ``use_bloom`` a superstep builds the per-shard
+  Bloom table (operators/dedup.py) from the current seen set in the
+  collect that broadcasts it; no Bloom state crosses supersteps.
 * lineage is truncated every iteration (localCheckpoint) or committed
   durably through plans/checkpoint.SnapshotStore for resume: each
   commit writes new data dirs and atomically replaces one manifest
@@ -81,6 +83,17 @@ from .checkpoint import SnapshotStore
 _norm = normalize_url_compat_col
 _host = host_of_col
 
+# rows per cached columnar batch while a DISK_ONLY corpus cache is
+# BUILT (spark.sql.inMemoryColumnarStorage.batchSize). Spark's
+# 10000-row default assumes narrow rows: at multi-KB html bodies one
+# in-flight batch is rows x body_size of transient heap PER BUILD TASK
+# (10000 x 20 KB = ~200 MB; x32 concurrent tasks = ~6 GB of pure build
+# churn on an 8 g heap). 1024 keeps build transients ~20 MB/task at
+# web-page row widths without hurting scan amortization (measured on
+# the 1 M-page build: 34 s at 1024 vs 42 s default — smaller
+# transients also GC cheaper).
+_DISK_BUILD_BATCH_ROWS = 1024
+
 
 @dataclass
 class CrawlConfig:
@@ -95,7 +108,6 @@ class CrawlConfig:
     global_budget: int | None = None
     max_retries: int = MAX_RETRIES  # config/config.go:34
     checkpoint_dir: str | None = None
-    politeness_salts: int = 16
     # broadcast the per-iteration frontier into the fetch join. True is
     # right whenever one iteration's scheduled batch fits in memory
     # (politeness-budgeted crawls always do); set False at 10^10-URL
@@ -129,18 +141,9 @@ class CrawlConfig:
     # ~35-45 s on the 8 g heap. The knob stays: it is the right dial
     # whenever corpus >> storage pool, where MEMORY_AND_DISK would
     # evict-thrash through the serializer per superstep.)
+    # DISK_ONLY also builds the cache in 1024-row columnar batches
+    # (_DISK_BUILD_BATCH_ROWS).
     cache_storage_level: str = "MEMORY_AND_DISK"
-    # rows per cached columnar batch during the corpus cache BUILD
-    # (spark.sql.inMemoryColumnarStorage.batchSize; None = keep the
-    # session default). Spark's 10000-row default assumes narrow rows:
-    # at multi-KB html bodies one in-flight batch is rows x body_size
-    # of transient heap PER BUILD TASK (10000 x 20 KB = ~200 MB; x32
-    # concurrent tasks = ~6 GB of pure build churn on an 8 g heap).
-    # 1024 keeps build transients ~20 MB/task at web-page row widths
-    # without hurting scan amortization (measured on the 1 M-page
-    # build: 34 s at 1024 vs 42 s default — smaller transients also
-    # GC cheaper). Set alongside DISK_ONLY for huge-body corpora.
-    cache_batch_rows: int | None = None
     # the pages table is already keyed (url_norm, html) — normalized,
     # body-capped, unique — e.g. a bucketed corpus table written by
     # sources.bucketed.write_bucketed_corpus. The crawl then joins on
@@ -169,15 +172,15 @@ class CrawlConfig:
     # route the J1 seen probe through the sharded-Bloom prefilter
     # (north_rule O4): definitely-new candidates skip the anti-join
     # shuffle entirely; maybes (incl. false positives) fall through to
-    # the exact anti-join, so the result is identical (tested). The
-    # shard table is maintained INCREMENTALLY — built once over the
-    # initial seen set, then each iteration's delta is OR-merged in —
-    # so the per-iteration cost is one pass over the (small) delta
-    # plus an ~n_shards-row broadcast, never a rebuild over the full
-    # seen table. The win grows with the seen set: at 10^10 seen keys
-    # the candidate-side shuffle the probe removes is the dominant J1
-    # cost. Default False at fixture scale (probe overhead > savings
-    # when seen fits in a broadcast anyway).
+    # the exact anti-join, so the result is identical (tested). Each
+    # probing superstep builds the shard table from the current seen
+    # set, sized from its row count, inside the collect that broadcasts
+    # it, and destroys the broadcast once the probe's output is cut:
+    # the loop carries no filter state, since the exact anti-join scans
+    # seen every superstep anyway. The win grows with the seen set: at
+    # 10^10 seen keys the candidate-side shuffle the probe removes is
+    # the dominant J1 cost. Default False at fixture scale (probe
+    # overhead > savings when seen fits in a broadcast anyway).
     use_bloom: bool = False
     # retain only the last K committed snapshots (None = retain all):
     # after each commit the loop runs the store's expire_snapshots —
@@ -329,17 +332,14 @@ def crawl(
     store = SnapshotStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
     corpus = _prepare_pages(pages, url_col, html_col, pre_keyed=cfg.corpus_pre_keyed)
+    disk_only = cfg.cache_storage_level == "DISK_ONLY"
     batch_conf = "spark.sql.inMemoryColumnarStorage.batchSize"
-    saved_batch = (
-        spark.conf.get(batch_conf, None)
-        if cfg.cache_batch_rows is not None
-        else None
-    )
-    if cfg.cache_batch_rows is not None:
+    saved_batch = spark.conf.get(batch_conf, None)
+    if disk_only:
         # batchSize is read when the InMemoryRelation is planned
         # (persist below), so set-before/restore-after scopes it to
         # this cache only
-        spark.conf.set(batch_conf, str(cfg.cache_batch_rows))
+        spark.conf.set(batch_conf, str(_DISK_BUILD_BATCH_ROWS))
     try:
         corpus = corpus.persist(getattr(StorageLevel, cfg.cache_storage_level))
         # materialize the cache NOW, in one deterministic job —
@@ -348,7 +348,7 @@ def crawl(
         # re-runs the corpus prep per branch
         corpus.count()
     finally:
-        if cfg.cache_batch_rows is not None:
+        if disk_only:
             if saved_batch is None:
                 spark.conf.unset(batch_conf)
             else:
@@ -429,14 +429,20 @@ def crawl(
     if robots_df is not None:
         frontier = filter_allowed(frontier, robots_df)
     frontier = frontier.localCheckpoint(eager=True)
-    if initial_seen is not None:
-        seen = initial_seen.select(
-            "url_norm", "url", "host", "depth", "iter"
-        ).localCheckpoint(eager=True)
-    else:
-        seen = frontier.select(
-            "url_norm", "url", "host", "depth", F.lit(0).alias("iter")
-        ).localCheckpoint(eager=True)
+    # the seen count rides its first cut; each superstep adds its n_new
+    # (new is anti-joined against seen, so the union adds no duplicate)
+    seen_obs = Observation("seen0")
+    seen = (
+        (
+            initial_seen
+            if initial_seen is not None
+            else frontier.withColumn("iter", F.lit(0))
+        )
+        .select("url_norm", "url", "host", "depth", "iter")
+        .observe(seen_obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_seen = int(seen_obs.get["n"])
     ncoal = max(4, spark.sparkContext.defaultParallelism)
 
     def cut_downloads(state: DataFrame, name: str) -> tuple[DataFrame, int]:
@@ -456,40 +462,32 @@ def crawl(
         dl, n_pending_dl = spark.createDataFrame([], download_log.LOG_SCHEMA), 0
     metrics: list[dict] = []
 
-    bloom_shards = None
-    # sized once from the initial seen count, then held fixed so the
-    # incremental OR-merges stay structure-compatible
-    bloom_ns = bloom_bits = 0
-    if cfg.use_bloom:
-        bloom_ns, bloom_bits = dedup_ops.resolve_bloom_sizing(seen.count())
-        bloom_shards = dedup_ops.build_bloom_shards(
-            seen, "url_norm", bloom_ns, bloom_bits
-        ).localCheckpoint(eager=True)
+    if store and initial_seen is None:
+        # a fresh crawl commits its seeds as superstep 0; a resume
+        # re-enters from a committed snapshot and writes nothing before
+        # its first superstep
+        store.write_iter(0, seen, frontier)
 
-    if store and start_iter == 0:
-        closed = None
-        if initial_downloads is not None:
-            closed = dl.filter(~download_log.queued())
-        store.write_iter(0, seen, frontier, closed)
-
+    budgeted = (
+        cfg.budget_per_host is not None
+        or cfg.global_budget is not None
+        or host_budgets is not None
+    )
     it = start_iter
     n_frontier = frontier.count()
-    while it < cfg.max_iterations:
+    # frontier = deferred ∪ new, so an empty frontier is exhaustion with
+    # or without a budget
+    while it < cfg.max_iterations and n_frontier > 0:
         t0 = time.time()
-        if (
-            cfg.budget_per_host is None
-            and cfg.global_budget is None
-            and host_budgets is None
-        ):
-            # no politeness budget: everything schedules, nothing defers —
-            # skip the window entirely (and its count action)
+        if not budgeted:
+            # everything schedules, nothing defers — skip the window
+            # entirely (and its count action)
             scheduled, deferred = frontier, None
             n_sched = n_frontier
         else:
             scheduled, deferred = schedule(
                 frontier,
                 cfg.budget_per_host,
-                cfg.politeness_salts,
                 host_ranks=host_ranks,
                 global_budget=cfg.global_budget,
                 host_budgets=host_budgets,
@@ -497,8 +495,8 @@ def crawl(
             if cfg.plan_hook is not None:
                 cfg.plan_hook(it, "schedule", _physical_str(scheduled))
             n_sched = scheduled.count()
-        if n_sched == 0:
-            break
+            if n_sched == 0:
+                break  # a zero budget schedules nothing
         it += 1
         t_sched = time.time()
 
@@ -577,9 +575,14 @@ def crawl(
         # J1: the crawl-seen anti-join (crawler_twotier.go:195,224-245),
         # optionally behind the sharded-Bloom prefilter (O4): probe-False
         # rows skip the shuffle, probe-True rows get the exact join.
+        # Build and probe must share one resolved sizing pair, or the
+        # probe can miss a seen key (dedup.resolve_bloom_sizing).
         bloom_bc = None
-        if bloom_shards is not None:
-            bloom_bc = dedup_ops.broadcast_bloom_shards(bloom_shards)
+        if cfg.use_bloom:
+            bloom_ns, bloom_bits = dedup_ops.resolve_bloom_sizing(n_seen)
+            bloom_bc = dedup_ops.broadcast_bloom_shards(
+                dedup_ops.build_bloom_shards(seen, "url_norm", bloom_ns, bloom_bits)
+            )
             def_new, maybe = dedup_ops.bloom_probe_broadcast(
                 deduped, bloom_bc, "url_norm", bloom_ns, bloom_bits,
             )
@@ -633,15 +636,7 @@ def crawl(
         # SLOWER (10.4-11.3 s vs 9.7-10.3 s at sf0.1) — the uncut union
         # plan re-executes per consumer and costs more than the cut
         seen = seen.unionByName(seen_delta).coalesce(ncoal).localCheckpoint(eager=True)
-        if bloom_shards is not None:
-            # incremental maintenance: OR the delta's shards into the
-            # standing state (never a rebuild over the full seen set)
-            bloom_shards = dedup_ops.merge_bloom_shards(
-                bloom_shards,
-                dedup_ops.build_bloom_shards(
-                    seen_delta, "url_norm", bloom_ns, bloom_bits
-                ),
-            ).localCheckpoint(eager=True)
+        n_seen += n_new
         if deferred is None:
             frontier = new
             n_frontier = n_new
@@ -686,7 +681,7 @@ def crawl(
             if cfg.snapshot_keep is not None:
                 store.expire_snapshots(cfg.snapshot_keep)
 
-        # superseded localCheckpoint blocks (old seen/frontier/dl/bloom
+        # superseded localCheckpoint blocks (old seen/frontier/dl
         # states) are only reaped by ContextCleaner after a JVM GC
         # decides the RDD objects are dead — which a low-pressure loop
         # may never trigger (measured: 89 cached RDDs after 32
@@ -699,14 +694,6 @@ def crawl(
 
             _gc.collect()
             spark.sparkContext._jvm.System.gc()
-
-        if (
-            n_new == 0
-            and cfg.budget_per_host is None
-            and cfg.global_budget is None
-            and host_budgets is None
-        ):
-            break  # frontier exhausted (deferred is empty without budgets)
 
     # mark still-pending downloads (queue drain state, C6)
     downloads = download_log.finalize_download_log(dl, it)

@@ -249,6 +249,33 @@ def test_bloom_broadcasts_destroyed(spark, monkeypatch):
     assert len(live) <= 1, f"{len(live)} of {len(made)} broadcasts still valid"
 
 
+def test_bloom_sizing_tracks_seen(spark, monkeypatch):
+    """Each superstep that probes sizes its Bloom table from the seen
+    set it probes: resolve_bloom_sizing gets the seed count plus the
+    new URLs of every earlier superstep, so the filter does not fill
+    up as seen grows past the size it had at the start."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators import (
+        dedup,
+    )
+
+    calls = []
+    resolve = dedup.resolve_bloom_sizing
+
+    def recording_resolve(n_keys, *args, **kwargs):
+        calls.append(n_keys)
+        return resolve(n_keys, *args, **kwargs)
+
+    monkeypatch.setattr(dedup, "resolve_bloom_sizing", recording_resolve)
+    res = run_engine(
+        spark,
+        CrawlConfig(budget_per_host=3, max_iterations=4, use_bloom=True),
+    )
+    new = [m["new_urls"] for m in res.metrics]
+    assert res.iterations == 4 and sum(new) > 0
+    assert calls == [1 + sum(new[:i]) for i in range(len(new))]
+    assert res.seen.count() == 1 + sum(new)
+
+
 def test_every_config_knob_is_read():
     """Every CrawlConfig field must be read somewhere in the engine
     package: a knob that nothing reads is a setting that silently does

@@ -418,3 +418,25 @@ def test_time_travel_resume_removes_abandoned_timeline(spark, tmp_path):
     store = SnapshotStore(ck)
     assert store.latest_iter() == 2
     assert _rows(store.read_seen(spark, 2)) == _rows(res.seen)
+
+
+def test_resume_as_of_zero_keeps_superstep_zero(spark, tmp_path):
+    """A resume from superstep 0 reads that snapshot and commits only
+    the supersteps it runs: superstep 0's manifest entry, and the dirs
+    it names, stay as the crawl wrote them."""
+    ck = str(tmp_path)
+    _run(spark, CrawlConfig(checkpoint_dir=ck, max_iterations=1))  # commits 0, 1
+
+    def superstep_zero():
+        with open(os.path.join(ck, "_meta.json")) as f:
+            entry = json.load(f)["snaps"]["0"]
+        return entry, {d: sorted(os.listdir(os.path.join(ck, d))) for d in entry.values()}
+
+    before = superstep_zero()
+    resume(
+        spark, quirk_pages(spark),
+        CrawlConfig(checkpoint_dir=ck, max_iterations=1),
+        as_of=0,
+    )
+    assert SnapshotStore(ck).latest_iter() == 1
+    assert superstep_zero() == before
