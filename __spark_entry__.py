@@ -783,12 +783,19 @@ def q_is_document_url(spark, sf_dir):
 def q_crawl_frontier_bfs(spark, sf_dir):
     """Flagship: full frontier loop (fetch-join + route + extract +
     normalize + seen anti-join, SURVEY.md §3.2) on the clean corpus.
-    Runs with the sharded-Bloom J1 prefilter ON so the driver gate
-    verifies the scale path end-to-end (bit-for-bit equal to the
-    exact-join path — also asserted in tests/test_frontier.py)."""
+    Runs with the sharded-Bloom J1 prefilter ON and broadcast joins
+    off, so seen never fits a broadcast and every superstep takes the
+    prefilter: the driver gate verifies the scale path end-to-end
+    (bit-for-bit equal to the exact-join path — also asserted in
+    tests/test_frontier.py)."""
     pages = pagesrc.synth_clean_pages(spark, sf_dir)
     seeds = spark.sql(pagesrc.seeds_sql())
-    res = crawl(spark, pages, seeds, CrawlConfig(use_bloom=True))
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        res = crawl(spark, pages, seeds, CrawlConfig(use_bloom=True))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     return res.seen.select("url_norm", "depth")
 
 

@@ -36,11 +36,20 @@ Scale notes (100 TB / 10^10 frontier):
   rescanning; in the sandbox the synthesized corpus is persisted once
   (the reference's response cache, O11) and rescanned per iteration.
 * seen grows monotonically and never reaches the driver: candidate
-  dedup is a shuffle on url_norm, the seen probe is a left-anti join
-  (Spark's runtime Bloom-filter join pruning is enabled in
-  session.py). With ``use_bloom`` a superstep builds the per-shard
-  Bloom table (operators/dedup.py) from the current seen set in the
-  collect that broadcasts it; no Bloom state crosses supersteps.
+  dedup is a shuffle on url_norm, the seen probe is a left-anti join.
+  Its strategy follows seen's MEASURED key bytes (observed on each
+  cut, no job of their own), never Catalyst's estimate, which
+  compounds across checkpoints (1e11 B for 52 rows): while they fit
+  ``spark.sql.autoBroadcastJoinThreshold`` the probe broadcasts seen's
+  keys and shuffles nothing. Past it, ``use_bloom`` puts the per-shard
+  Bloom prefilter (operators/dedup.py) in front of the exact join,
+  built from the current seen set in the collect that broadcasts it;
+  no Bloom state crosses supersteps. Otherwise the planner picks the
+  join (Spark's runtime Bloom-filter join pruning is on in
+  session.py).
+* a budgeted superstep cuts its scheduled batch once: the politeness
+  windows run in that cut only, and the fetch join and the deferred
+  split (a broadcast anti-join of the frontier) read it.
 * lineage is truncated every iteration (localCheckpoint) or committed
   durably through plans/checkpoint.SnapshotStore for resume: each
   commit writes new data dirs and atomically replaces one manifest
@@ -119,7 +128,8 @@ class CrawlConfig:
     force_path: str | None = None
     # observability hook for the plans the LOOP actually builds: called
     # as plan_hook(iteration, stage, physical_plan_str) for each
-    # superstep's schedule and fetch-join frames before they execute.
+    # superstep's schedule, fetch-join and seen-probe frames before
+    # they execute.
     # tests/test_plans.py drives the in-loop plan contracts through it
     # (no-BNLJ / no-SinglePartition / broadcast-frontier at iteration
     # k, where the scale-critical plans live — a static composition
@@ -169,18 +179,20 @@ class CrawlConfig:
     # host with Crawl-delay d gets max(1, floor(window/d)) slots per
     # iteration (operators/robots.delay_budgets). None = ignore delays.
     crawl_delay_window_s: float | None = None
-    # route the J1 seen probe through the sharded-Bloom prefilter
-    # (north_rule O4): definitely-new candidates skip the anti-join
-    # shuffle entirely; maybes (incl. false positives) fall through to
-    # the exact anti-join, so the result is identical (tested). Each
-    # probing superstep builds the shard table from the current seen
-    # set, sized from its row count, inside the collect that broadcasts
-    # it, and destroys the broadcast once the probe's output is cut:
-    # the loop carries no filter state, since the exact anti-join scans
-    # seen every superstep anyway. The win grows with the seen set: at
-    # 10^10 seen keys the candidate-side shuffle the probe removes is
-    # the dominant J1 cost. Default False at fixture scale (probe
-    # overhead > savings when seen fits in a broadcast anyway).
+    # allow the sharded-Bloom prefilter (north_rule O4) in front of
+    # the J1 seen probe once seen no longer fits a broadcast: a
+    # superstep whose seen key bytes fit
+    # spark.sql.autoBroadcastJoinThreshold broadcasts them into the
+    # exact anti-join instead, with or without this flag (the filter
+    # would cost more than the probe it saves). Past the limit (or at
+    # -1), definitely-new candidates skip the anti-join shuffle
+    # entirely; maybes (incl. false positives) fall through to the
+    # exact anti-join, so the result is identical (tested). Each such
+    # superstep builds the shard table from the current seen set,
+    # sized from its row count, inside the collect that broadcasts it,
+    # and destroys the broadcast once the probe's output is cut: the
+    # loop carries no filter state. At 10^10 seen keys the
+    # candidate-side shuffle the probe removes is the dominant J1 cost.
     use_bloom: bool = False
     # retain only the last K committed snapshots (None = retain all):
     # after each commit the loop runs the store's expire_snapshots —
@@ -268,6 +280,20 @@ def _stat_aggs() -> list:
         F.sum(F.when(F.col("path") == "fast", 1).otherwise(0)).alias("fast_cnt"),
         F.sum(F.when(F.col("path") == "slow", 1).otherwise(0)).alias("slow_cnt"),
     ]
+
+
+def _cut(
+    df: DataFrame, name: str, n_parts: int | None, *aggs
+) -> tuple[DataFrame, dict]:
+    """Materialize ``df`` once as a local checkpoint, coalesced to
+    ``n_parts`` when given. The aliased ``aggs`` ride that action as an
+    observation, so the figures of a cut cost no job of their own."""
+    obs = Observation(name)
+    df = df.observe(obs, *aggs)
+    if n_parts:
+        df = df.coalesce(n_parts)
+    df = df.localCheckpoint(eager=True)
+    return df, {k: int(v or 0) for k, v in obs.get.items()}
 
 
 def _physical_str(df: DataFrame) -> str:
@@ -428,33 +454,33 @@ def crawl(
     frontier = _seed_frontier(seeds)
     if robots_df is not None:
         frontier = filter_allowed(frontier, robots_df)
-    frontier = frontier.localCheckpoint(eager=True)
-    # the seen count rides its first cut; each superstep adds its n_new
-    # (new is anti-joined against seen, so the union adds no duplicate)
-    seen_obs = Observation("seen0")
-    seen = (
+    n_rows = F.count(F.lit(1)).alias("n")
+    key_bytes = F.sum(F.octet_length("url_norm")).alias("bytes")
+    frontier, got = _cut(frontier, "frontier0", None, n_rows)
+    n_frontier = got["n"]
+    # seen's row count and key bytes ride its first cut; each superstep
+    # adds those of its new rows (new is anti-joined against seen, so
+    # the union adds no duplicate)
+    seen, got = _cut(
         (
             initial_seen
             if initial_seen is not None
             else frontier.withColumn("iter", F.lit(0))
-        )
-        .select("url_norm", "url", "host", "depth", "iter")
-        .observe(seen_obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
+        ).select("url_norm", "url", "host", "depth", "iter"),
+        "seen0", None, n_rows, key_bytes,
     )
-    n_seen = int(seen_obs.get["n"])
+    n_seen, seen_bytes = got["n"], got["bytes"]
+    # the session's broadcast limit in bytes (-1 = never broadcast)
+    bc_limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
     ncoal = max(4, spark.sparkContext.defaultParallelism)
 
     def cut_downloads(state: DataFrame, name: str) -> tuple[DataFrame, int]:
         """The download state's one cut; the queue length rides it."""
-        obs = Observation(name)
-        state = (
-            state.select("url", "status", "retry", "iter")
-            .observe(obs, F.count(F.when(download_log.queued(), 1)).alias("n"))
-            .coalesce(ncoal)
-            .localCheckpoint(eager=True)
+        state, got = _cut(
+            state.select("url", "status", "retry", "iter"), name, ncoal,
+            F.count(F.when(download_log.queued(), 1)).alias("n"),
         )
-        return state, int(obs.get["n"])
+        return state, got["n"]
 
     if initial_downloads is not None:
         dl, n_pending_dl = cut_downloads(initial_downloads, "dl0")
@@ -474,18 +500,17 @@ def crawl(
         or host_budgets is not None
     )
     it = start_iter
-    n_frontier = frontier.count()
     # frontier = deferred ∪ new, so an empty frontier is exhaustion with
     # or without a budget
     while it < cfg.max_iterations and n_frontier > 0:
         t0 = time.time()
         if not budgeted:
             # everything schedules, nothing defers — skip the window
-            # entirely (and its count action)
+            # entirely (and its cut)
             scheduled, deferred = frontier, None
             n_sched = n_frontier
         else:
-            scheduled, deferred = schedule(
+            scheduled, _ = schedule(
                 frontier,
                 cfg.budget_per_host,
                 host_ranks=host_ranks,
@@ -494,9 +519,18 @@ def crawl(
             )
             if cfg.plan_hook is not None:
                 cfg.plan_hook(it, "schedule", _physical_str(scheduled))
-            n_sched = scheduled.count()
+            # cut the batch once, so the salted windows run only here
+            # and not again in the fetch join and the deferred split
+            scheduled, got = _cut(scheduled, f"iter{it + 1}_sched", ncoal, n_rows)
+            n_sched = got["n"]
             if n_sched == 0:
                 break  # a zero budget schedules nothing
+            keys = scheduled.select("url_norm")
+            deferred = frontier.join(
+                F.broadcast(keys) if cfg.broadcast_frontier else keys,
+                "url_norm",
+                "left_anti",
+            )
         it += 1
         t_sched = time.time()
 
@@ -521,20 +555,16 @@ def crawl(
         # download branch and the stats read, so the fetch join and the
         # python extract run exactly once per superstep; the totals ride
         # the checkpoint action as an observation.
-        obs = Observation(f"iter{it}")
-        ext = (
-            extract_stage(routed, url_col="url", html_col="html")
-            .select(
+        ext, tot = _cut(
+            extract_stage(routed, url_col="url", html_col="html").select(
                 "depth",
                 "path",
                 "links",
                 F.col("docs.url").alias("docs"),
                 F.spark_partition_id().alias("partition_id"),
-            )
-            .observe(obs, *_stat_aggs())
-            .localCheckpoint(eager=True)
+            ),
+            f"iter{it}", None, *_stat_aggs(),
         )
-        tot = {k: int(v or 0) for k, v in obs.get.items()}
 
         # F1 (parent depth) -> explode -> P1 normalize -> F2 -> batch dedup
         cand = (
@@ -572,13 +602,20 @@ def crawl(
                 F.col("m.cdepth").alias("depth"),
             )
         )
-        # J1: the crawl-seen anti-join (crawler_twotier.go:195,224-245),
-        # optionally behind the sharded-Bloom prefilter (O4): probe-False
-        # rows skip the shuffle, probe-True rows get the exact join.
-        # Build and probe must share one resolved sizing pair, or the
-        # probe can miss a seen key (dedup.resolve_bloom_sizing).
+        # J1: the crawl-seen anti-join (crawler_twotier.go:195,224-245).
+        # While seen's measured key bytes fit the broadcast limit, seen's
+        # keys are broadcast into the exact join: the planner alone
+        # would sort-merge it, as its estimate of seen compounds across
+        # checkpoints. Past the limit, use_bloom puts the sharded-Bloom
+        # prefilter (O4) in front: probe-False rows skip the shuffle,
+        # probe-True rows get the exact join. Build and probe must share
+        # one resolved sizing pair, or the probe can miss a seen key
+        # (dedup.resolve_bloom_sizing).
+        seen_keys = seen.select("url_norm")
         bloom_bc = None
-        if cfg.use_bloom:
+        if seen_bytes <= bc_limit:
+            new = deduped.join(F.broadcast(seen_keys), "url_norm", "left_anti")
+        elif cfg.use_bloom:
             bloom_ns, bloom_bits = dedup_ops.resolve_bloom_sizing(n_seen)
             bloom_bc = dedup_ops.broadcast_bloom_shards(
                 dedup_ops.build_bloom_shards(seen, "url_norm", bloom_ns, bloom_bits)
@@ -586,26 +623,24 @@ def crawl(
             def_new, maybe = dedup_ops.bloom_probe_broadcast(
                 deduped, bloom_bc, "url_norm", bloom_ns, bloom_bits,
             )
-            new = def_new.unionByName(
-                maybe.join(seen.select("url_norm"), "url_norm", "left_anti")
-            )
+            new = def_new.unionByName(maybe.join(seen_keys, "url_norm", "left_anti"))
         else:
-            new = deduped.join(seen.select("url_norm"), "url_norm", "left_anti")
+            new = deduped.join(seen_keys, "url_norm", "left_anti")
         if robots_df is not None:
             from ..operators.robots import filter_allowed
 
             new = filter_allowed(new, robots_df)
-        # the row count rides the checkpoint action as an observation —
-        # a separate count() job per superstep is pure floor at scale
-        new_obs = Observation(f"iter{it}_new")
-        new = (
-            new.withColumn("priority", F.lit(False))
-            .withColumn("retry", F.lit(0))
-            .observe(new_obs, F.count(F.lit(1)).alias("n"))
-            .coalesce(ncoal)
-            .localCheckpoint(eager=True)
+        if cfg.plan_hook is not None:
+            cfg.plan_hook(it, "seen_probe", _physical_str(new))
+        # the row count and key bytes ride the checkpoint action as an
+        # observation — a separate count() job per superstep is pure
+        # floor at scale
+        new, got = _cut(
+            new.withColumn("priority", F.lit(False)).withColumn("retry", F.lit(0)),
+            f"iter{it}_new", ncoal, n_rows, key_bytes,
         )
-        n_new = int(new_obs.get["n"])
+        n_new = got["n"]
+        seen_bytes += got["bytes"]
         if bloom_bc is not None:
             # new is checkpointed, so no later job reads the probe: free
             # the shard copy on the driver, the executors and the
@@ -641,14 +676,10 @@ def crawl(
             frontier = new
             n_frontier = n_new
         else:
-            f_obs = Observation(f"iter{it}_frontier")
-            frontier = (
-                deferred.unionByName(new)
-                .observe(f_obs, F.count(F.lit(1)).alias("n"))
-                .coalesce(ncoal)
-                .localCheckpoint(eager=True)
+            frontier, got = _cut(
+                deferred.unionByName(new), f"iter{it}_frontier", ncoal, n_rows
             )
-            n_frontier = int(f_obs.get["n"])
+            n_frontier = got["n"]
 
         metrics.append(
             {

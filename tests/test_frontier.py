@@ -215,7 +215,43 @@ def test_body_cap_counts_bytes(spark):
     }
 
 
-def test_bloom_crawl_identical(spark, full):
+@pytest.fixture
+def bloom_branch(spark):
+    """Turn broadcast joins off for one test: seen then never fits a
+    broadcast, so a use_bloom crawl runs the Bloom prefilter in every
+    superstep."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    try:
+        yield
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_bloom_gated_off_while_seen_fits_broadcast(spark, full, monkeypatch):
+    """use_bloom allows the prefilter only past the broadcast limit: at
+    the session's default threshold the quirks crawl's seen set always
+    fits, so no superstep builds a shard table, and the exact broadcast
+    anti-join gives the exact crawl."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators import (
+        dedup,
+    )
+
+    built = []
+    build = dedup.build_bloom_shards
+
+    def recording_build(*args, **kwargs):
+        built.append(args)
+        return build(*args, **kwargs)
+
+    monkeypatch.setattr(dedup, "build_bloom_shards", recording_build)
+    res = run_engine(spark, CrawlConfig(use_bloom=True))
+    assert not built
+    assert {(r.url_norm, r.depth) for r in res.seen.collect()} == full["seen"]
+
+
+def test_bloom_crawl_identical(spark, full, bloom_branch):
     """J1 behind the sharded-Bloom prefilter (CrawlConfig.use_bloom)
     must be bit-for-bit the exact-join crawl: false positives fall
     through to the authoritative anti-join, false negatives are
@@ -225,7 +261,7 @@ def test_bloom_crawl_identical(spark, full):
     assert got == full["seen"]
 
 
-def test_bloom_broadcasts_destroyed(spark, monkeypatch):
+def test_bloom_broadcasts_destroyed(spark, monkeypatch, bloom_branch):
     """The Bloom prefilter ships its shard table to executors as a
     broadcast each superstep; the loop must destroy each one once the
     probe's output is checkpointed, so live broadcasts (and their
@@ -249,7 +285,7 @@ def test_bloom_broadcasts_destroyed(spark, monkeypatch):
     assert len(live) <= 1, f"{len(live)} of {len(made)} broadcasts still valid"
 
 
-def test_bloom_sizing_tracks_seen(spark, monkeypatch):
+def test_bloom_sizing_tracks_seen(spark, monkeypatch, bloom_branch):
     """Each superstep that probes sizes its Bloom table from the seen
     set it probes: resolve_bloom_sizing gets the seed count plus the
     new URLs of every earlier superstep, so the filter does not fill

@@ -215,12 +215,15 @@ def test_documents_scan_prunes_columns(plans):
 def test_crawl_loop_plan_contracts(spark):
     """The BENCH.md §5 contracts, asserted on the plans the crawl loop
     ACTUALLY builds at every superstep (VERDICT r03 #5): per iteration
-    k, the scheduled-politeness frame and the fetch join must plan
-    with no CartesianProduct / BroadcastNestedLoopJoin, no all-to-one
-    Exchange SinglePartition (scalar partial_* finalizations exempt,
-    as in the lazy sweep), and the fetch join must broadcast the
-    FRONTIER side while the corpus branch reads straight from the
-    cache with no exchange of any kind below the join."""
+    k, the scheduled-politeness frame, the fetch join and the seen
+    probe must plan with no CartesianProduct / BroadcastNestedLoopJoin,
+    no all-to-one Exchange SinglePartition (scalar partial_*
+    finalizations exempt, as in the lazy sweep); the fetch join must
+    broadcast the FRONTIER side while the corpus branch reads straight
+    from the cache with no exchange of any kind below the join; and
+    the seen probe must broadcast seen's keys — Catalyst's estimate of
+    the checkpointed seen set compounds across supersteps, so the
+    planner alone plans the probe as a sort-merge join."""
     from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.frontier import (
         CrawlConfig,
         crawl,
@@ -243,14 +246,16 @@ def test_crawl_loop_plan_contracts(spark):
 
     fetches = [(it, p) for it, stage, p in captured if stage == "fetch_join"]
     schedules = [(it, p) for it, stage, p in captured if stage == "schedule"]
+    probes = [(it, p) for it, stage, p in captured if stage == "seen_probe"]
     assert len(fetches) >= 3, "loop did not run enough supersteps"
     assert len(schedules) >= 3
+    assert len(probes) == len(fetches)
 
     scalar_final = re.compile(
         r"Exchange SinglePartition[^\n]*\n[^\n]*"
         r"partial_(?:bloom_filter_agg|max\(|min\(|count\(|sum\()"
     )
-    for it, p in fetches + schedules:
+    for it, p in fetches + schedules + probes:
         assert "CartesianProduct" not in p, f"iter {it}"
         assert "BroadcastNestedLoopJoin" not in p, f"iter {it}"
         assert "Exchange SinglePartition" not in scalar_final.sub("", p), (
@@ -272,3 +277,6 @@ def test_crawl_loop_plan_contracts(spark):
         )
         hot = corpus_branch[: cache + 1]
         assert not any("Exchange" in ln for ln in hot), (it, hot)
+    for it, p in probes:
+        assert "BroadcastHashJoin" in p, f"iter {it}"
+        assert "SortMergeJoin" not in p, f"iter {it}"
