@@ -24,6 +24,7 @@ Python UDFs). The scalar cores are shared with the test oracle.
 from __future__ import annotations
 
 from html.parser import HTMLParser
+from urllib.parse import urlsplit
 
 import pandas as pd
 from pyspark.sql import DataFrame, Window
@@ -60,15 +61,25 @@ def extract_links_fast_py(html: bytes, base_url: str) -> list[str]:
       (fastpath.go:70-72);
     - resolution via the non-RFC makeAbsolute (urlnorm.make_absolute_fast_py).
     """
+    return _resolve_fast(_fast_hrefs(html), base_url)
+
+
+def _resolve_fast(hrefs: list[str], base_url: str) -> list[str]:
+    base_scheme = base_url.split("://", 1)[0] if "://" in base_url else ""
+    base_host = host_of_py(base_url) or ""
+    urls = (make_absolute_fast_py(raw, base_url, base_scheme, base_host) for raw in hrefs)
+    return [u for u in urls if u]
+
+
+def _fast_hrefs(html: bytes) -> list[str]:
+    """The raw hrefs the fast scan keeps, in page order, before
+    resolution (extract_links_fast_py)."""
     if not html:
         return []
     b = html.encode("utf-8") if isinstance(html, str) else html
     low = b.lower()  # one C pass; positions align with b
     n = len(b)
-    p = host_of_py(base_url)
-    base_scheme = base_url.split("://", 1)[0] if "://" in base_url else ""
-    base_host = p or ""
-    urls: list[str] = []
+    hrefs: list[str] = []
     i = 0
     limit = n - 6
     while i < limit:
@@ -96,11 +107,15 @@ def extract_links_fast_py(html: bytes, base_url: str) -> list[str]:
         if i > url_start:
             raw = b[url_start:i].decode("utf-8", errors="replace")
             if href_ok_fast_py(raw):
-                abs_url = make_absolute_fast_py(raw, base_url, base_scheme, base_host)
-                if abs_url:
-                    urls.append(abs_url)
+                hrefs.append(raw)
         i += 1  # fastpath.go:82
-    return urls
+    return hrefs
+
+
+def _verbatim_fast(raw: str) -> bool:
+    """makeAbsolute returns ``raw`` itself, reading no byte of the base
+    (the 7-byte prefix branch, fastpath.go:110)."""
+    return len(raw) > 7 and raw[:7] in ("http://", "https:/")
 
 
 # ---------------------------------------------------------------------------
@@ -198,9 +213,11 @@ def analyze_slow_py(
 ) -> dict:
     """AnalyzeDocument (slowpath.go:57-132) scalar core.
 
-    Returns dict(urls, docs, title, description, has_nav, link_count)
-    where docs is a list of {url, ext, title, context} dicts —
-    DocumentInfo at slowpath.go:35-40.
+    Returns dict(urls, docs, title, description, has_nav, link_count,
+    base_free) where docs is a list of {url, ext, title, context} dicts
+    — DocumentInfo at slowpath.go:35-40. ``base_free``: every kept href
+    has a scheme and a netloc, so resolution read no more of
+    ``base_url`` than its (lowercased) scheme.
     """
     empty = {
         "urls": [],
@@ -209,6 +226,7 @@ def analyze_slow_py(
         "description": "",
         "has_nav": False,
         "link_count": 0,
+        "base_free": True,
     }
     root = _parse_dom(html) if html else None
     if root is None:
@@ -221,6 +239,7 @@ def analyze_slow_py(
     docs: list[dict] = []
     seen_title = False
     seen_desc = False
+    base_free = True
 
     for node in root.iter_nodes():
         if node.tag == "title" and not seen_title:
@@ -239,6 +258,9 @@ def analyze_slow_py(
             if abs_url is None:
                 continue
             urls.append(abs_url)
+            # urljoin already parsed href, so this split cannot raise
+            parts = urlsplit(href)
+            base_free = base_free and bool(parts.scheme and parts.netloc)
             if is_document_slow_py(abs_url, doc_extensions):  # :104
                 docs.append(
                     {
@@ -255,36 +277,13 @@ def analyze_slow_py(
         "description": description,
         "has_nav": has_nav,
         "link_count": len(urls),
+        "base_free": base_free,
     }
 
 
 # ---------------------------------------------------------------------------
 # pandas UDFs + DataFrame-level operators
 # ---------------------------------------------------------------------------
-
-SLOW_RESULT_TYPE = T.StructType(
-    [
-        T.StructField("urls", T.ArrayType(T.StringType())),
-        T.StructField(
-            "docs",
-            T.ArrayType(
-                T.StructType(
-                    [
-                        T.StructField("url", T.StringType()),
-                        T.StructField("ext", T.StringType()),
-                        T.StructField("title", T.StringType()),
-                        T.StructField("context", T.StringType()),
-                    ]
-                )
-            ),
-        ),
-        T.StructField("title", T.StringType()),
-        T.StructField("description", T.StringType()),
-        T.StructField("has_nav", T.BooleanType()),
-        T.StructField("link_count", T.IntegerType()),
-    ]
-)
-
 
 @F.pandas_udf(T.ArrayType(T.StringType()))
 def extract_links_fast(html: pd.Series, base_url: pd.Series) -> pd.Series:
@@ -297,6 +296,7 @@ def extract_links_fast(html: pd.Series, base_url: pd.Series) -> pd.Series:
     )
 
 
+# a row without html or url: no href, so no byte of any base is read
 _EMPTY_SLOW = {
     "urls": None,
     "docs": None,
@@ -304,19 +304,28 @@ _EMPTY_SLOW = {
     "description": None,
     "has_nav": None,
     "link_count": None,
+    "base_free": True,
 }
 
 
 def extract_routed_py(html, base_url: str, path: str) -> dict:
     """Per-row dispatch of the two tokenizer tiers (coordinator.go:29-33
     routes, then crawler_twotier.go:121-167 calls the chosen tier).
-    Fast rows fill only ``urls``/``link_count``; slow rows fill all."""
+    Fast rows fill only ``urls``/``link_count``/``base_free``; slow rows
+    fill all.
+
+    ``base_free``: the output reads no more of ``base_url`` than its
+    lowercased scheme, so it is the same for any base URL with the same
+    compat-normalized form. Fast tier: every kept href took
+    makeAbsolute's verbatim branch. Slow tier: see analyze_slow_py."""
     if path == "slow":
         return analyze_slow_py(html, base_url)
     out = dict(_EMPTY_SLOW)
-    urls = extract_links_fast_py(html, base_url)
+    hrefs = _fast_hrefs(html)
+    urls = _resolve_fast(hrefs, base_url)
     out["urls"] = urls
     out["link_count"] = len(urls)
+    out["base_free"] = all(_verbatim_fast(h) for h in hrefs)
     return out
 
 
@@ -332,10 +341,14 @@ def extract_stage(pages: DataFrame, url_col: str = "url", html_col: str = "html"
     """One pass of the two-tier extract stage over routed pages.
 
     Input must carry a ``path`` column ('fast'|'slow') from
-    routing.route_decision_col. Output: one row per page with
-    ``links array<string>``, ``docs``, page metadata columns — and
-    WITHOUT ``html_col`` (the single caller, the crawl loop, dropped
-    it immediately anyway; never emitting it is the point, see below).
+    routing.route_decision_col. Output: one row per page with the
+    input's other columns, ``links array<string>``, ``docs
+    array<string>`` (the DocumentInfo urls) and ``base_free`` (see
+    extract_routed_py) — and WITHOUT ``html_col``: never emitting it is
+    the point, see below. The crawl loop runs it once per crawl over
+    the whole corpus (its link index) and again only on pages reached
+    by a URL the index cannot serve; no caller reads the page metadata
+    (analyze_slow_py still computes it).
 
     SINGLE source pass: one Arrow hop receives the whole routed row
     and dispatches per row. The earlier design — two filtered branches
@@ -361,10 +374,8 @@ def extract_stage(pages: DataFrame, url_col: str = "url", html_col: str = "html"
         list(keep_fields)
         + [
             T.StructField("links", T.ArrayType(T.StringType())),
-            T.StructField("docs", SLOW_RESULT_TYPE["docs"].dataType),
-            T.StructField("page_title", T.StringType()),
-            T.StructField("page_description", T.StringType()),
-            T.StructField("has_nav", T.BooleanType()),
+            T.StructField("docs", T.ArrayType(T.StringType())),
+            T.StructField("base_free", T.BooleanType()),
         ]
     )
 
@@ -377,16 +388,12 @@ def extract_stage(pages: DataFrame, url_col: str = "url", html_col: str = "html"
                 for h, u, p in zip(pdf[html_col], pdf[url_col], pdf["path"])
             ]
             out = pdf[keep_names].copy()
-            for col, key in (
-                ("links", "urls"),
-                ("docs", "docs"),
-                ("page_title", "title"),
-                ("page_description", "description"),
-                ("has_nav", "has_nav"),
+            for col, vals in (
+                ("links", [r["urls"] for r in rows]),
+                ("docs", [r["docs"] and [d["url"] for d in r["docs"]] for r in rows]),
+                ("base_free", [r["base_free"] for r in rows]),
             ):
-                out[col] = pd.Series(
-                    [r[key] for r in rows], index=out.index, dtype=object
-                )
+                out[col] = pd.Series(vals, index=out.index, dtype=object)
             yield out
 
     return pages.mapInPandas(_extract_batches, out_schema)

@@ -66,6 +66,44 @@ def test_quirks_crawl_matches_oracle(full):
     assert {(s, r) for _, s, r in full["downloads"]} == {("failed", 4)}
 
 
+def test_quirks_relative_links_extract_live(full):
+    """Relative hrefs resolve against the URL that reached the page, so
+    a page reached by another raw URL than its own is extracted live,
+    not served from the link index; test_quirks_crawl_matches_oracle
+    checks this same crawl against the reference."""
+    assert any(m["live_extract"] > 0 for m in full["metrics"])
+
+
+def test_clean_crawl_extracts_each_page_once(spark, sf_small, monkeypatch):
+    """Every href of the clean corpus is absolute, so the link index
+    serves every superstep: extract_stage runs once per crawl() (the
+    index build) and no row is extracted live, though some pages are
+    reached by a raw URL other than their own."""
+    from pyspark.sql import functions as F
+
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans import (
+        frontier as fr,
+    )
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.sources import (
+        pages as pagesrc,
+    )
+
+    calls = []
+    stage = fr.extract_stage
+
+    def counting_stage(*args, **kwargs):
+        calls.append(args)
+        return stage(*args, **kwargs)
+
+    monkeypatch.setattr(fr, "extract_stage", counting_stage)
+    pages = pagesrc.synth_clean_pages(spark, sf_small)
+    res = crawl(spark, pages, spark.sql(pagesrc.seeds_sql()), CrawlConfig(max_iterations=4))
+    assert res.iterations == 4 and len(calls) == 1
+    assert [m["live_extract"] for m in res.metrics] == [0, 0, 0, 0]
+    own = pages.select(fr._norm(F.col("url")).alias("url_norm"), F.col("url").alias("own"))
+    assert res.seen.join(own, "url_norm").filter(F.col("url") != F.col("own")).count() > 0
+
+
 def test_depth_cutoff(full):
     depths = dict(full["seen"])
     assert depths["https://quirk.example/chain/11"] == 13

@@ -397,6 +397,28 @@ def test_resume_after_injected_crash(spark, ck_run, tmp_path, monkeypatch):
     assert _count(ck, "seen") == store.latest_iter() + 1
 
 
+def test_crashed_crawl_releases_its_caches(spark, tmp_path, monkeypatch):
+    """A crawl that raises (here: superstep 1's commit) still releases
+    the corpus and link-index caches it persisted."""
+    from pyspark.storagelevel import StorageLevel
+
+    df_type = type(spark.range(1))
+    persist = df_type.persist
+    persisted = []
+
+    def recording_persist(df, *args, **kwargs):
+        persisted.append(df)
+        return persist(df, *args, **kwargs)
+
+    with monkeypatch.context() as mp:
+        mp.setattr(df_type, "persist", recording_persist)
+        _inject(mp, 2, only=("replace",))  # commit 0 succeeds
+        with pytest.raises(_Crash):
+            _run(spark, CrawlConfig(checkpoint_dir=str(tmp_path)))
+    assert persisted
+    assert all(df.storageLevel == StorageLevel.NONE for df in persisted)
+
+
 def test_time_travel_resume_removes_abandoned_timeline(spark, tmp_path):
     """A time-travel resume under a different budget: after its first
     commit, no directory written only by the abandoned timeline is on

@@ -244,6 +244,10 @@ def test_crawl_loop_plan_contracts(spark):
     )
     crawl(spark, pages, seeds, cfg)
 
+    # the live fallback's fetch (pages reached by a URL the link index
+    # cannot serve) is held to the same contract as the index join
+    lives = [(it, p) for it, stage, p in captured if stage == "fetch_live"]
+    assert lives, "no superstep extracted live"
     fetches = [(it, p) for it, stage, p in captured if stage == "fetch_join"]
     schedules = [(it, p) for it, stage, p in captured if stage == "schedule"]
     probes = [(it, p) for it, stage, p in captured if stage == "seen_probe"]
@@ -255,13 +259,13 @@ def test_crawl_loop_plan_contracts(spark):
         r"Exchange SinglePartition[^\n]*\n[^\n]*"
         r"partial_(?:bloom_filter_agg|max\(|min\(|count\(|sum\()"
     )
-    for it, p in fetches + schedules + probes:
+    for it, p in fetches + lives + schedules + probes:
         assert "CartesianProduct" not in p, f"iter {it}"
         assert "BroadcastNestedLoopJoin" not in p, f"iter {it}"
         assert "Exchange SinglePartition" not in scalar_final.sub("", p), (
             f"iter {it}: all-to-one exchange inside the loop"
         )
-    for it, p in fetches:
+    for it, p in fetches + lives:
         # frontier is the build side of one BroadcastHashJoin...
         joins = [ln for ln in p.splitlines() if "BroadcastHashJoin" in ln]
         assert joins and all("BuildLeft" in ln for ln in joins), f"iter {it}"

@@ -5,6 +5,7 @@ Arrow UDFs and the reference-semantics oracle share, so invariants here
 hold for the whole dataflow.
 """
 
+import re
 import string
 
 from hypothesis import given, settings
@@ -17,6 +18,9 @@ from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.functions.files imp
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.functions.urlnorm import (
     canonicalize_rfc3986_py,
     normalize_url_compat_py,
+)
+from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.extract import (
+    extract_routed_py,
 )
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.robots import (
     parse_robots_py,
@@ -122,6 +126,80 @@ def test_robots_total_and_empty_allows(txt, path):
     # verdict is total (never raises) and boolean
     assert robots_allowed_py(path or "/", rules) in (True, False)
     assert robots_allowed_py(path or "/", []) is True
+
+
+# --- link-index exactness ------------------------------------------------
+#
+# The crawl loop extracts each page once, with its own URL as the base,
+# and serves that row to a frontier URL with the same url_norm when the
+# extract is base_free. That is exact iff a base_free extract is the
+# same for every base that normalizes alike (lower, cut at '#'/'?').
+
+_abs_href = st.one_of(
+    st.builds(
+        lambda scheme, host, path: f"{scheme}://{host}{path}",
+        st.sampled_from(["http", "https", "HTTP", "Https", "hTtP", "ftp"]),
+        _host,
+        _path,
+    ),
+    st.from_regex(r"https:/[a-z]{1,8}", fullmatch=True),
+)
+_rel_href = st.one_of(
+    st.from_regex(r"//[a-z]{1,6}\.[a-z]{2,3}(/[A-Za-z0-9]{0,5}){0,2}", fullmatch=True),
+    st.from_regex(r"/[A-Za-z0-9._-]{0,8}(/[A-Za-z0-9]{0,5}){0,2}", fullmatch=True),
+    st.from_regex(r"[A-Za-z0-9][A-Za-z0-9._-]{0,8}(/[A-Za-z0-9]{0,5}){0,2}", fullmatch=True),
+    st.from_regex(r"[#?][A-Za-z0-9=]{1,6}", fullmatch=True),
+)
+_tier = st.sampled_from(["fast", "slow"])
+
+
+def _compat_norm(u: str) -> str:
+    """The crawl loop's url_norm (urlnorm.normalize_url_compat_col)."""
+    return re.sub(r"[#?].*$", "", u).lower()
+
+
+def _page(hrefs) -> bytes:
+    links = "".join(f'<p><a href="{h}">x</a></p> ' for h in hrefs)
+    return f"<html><body>{links}</body></html>".encode()
+
+
+@st.composite
+def _base_pair(draw):
+    """Two bases with equal url_norm that differ in the case of their
+    scheme, host or path, and in query or fragment."""
+    a = draw(urls())
+    head = _compat_norm(a)
+    flips = draw(st.lists(st.booleans(), min_size=len(head), max_size=len(head)))
+    head_b = "".join(c.swapcase() if f else c for c, f in zip(a[: len(head)], flips))
+    b = head_b + draw(st.sampled_from(["", "?", "#", "?x=1", "#top", "?q=A#f"]))
+    assert _compat_norm(a) == _compat_norm(b)
+    return a, b
+
+
+@given(
+    st.one_of(
+        st.lists(_abs_href, min_size=1, max_size=4),
+        st.lists(st.one_of(_abs_href, _rel_href), max_size=6),
+    ),
+    _base_pair(),
+    _tier,
+)
+@settings(max_examples=400, deadline=None)
+def test_base_free_extract_ignores_base(hrefs, bases, tier):
+    a, b = (extract_routed_py(_page(hrefs), base, tier) for base in bases)
+    assert a["base_free"] == b["base_free"]
+    if a["base_free"]:
+        assert a == b
+
+
+@given(_rel_href, urls(), _tier)
+@settings(max_examples=300, deadline=None)
+def test_relative_href_is_never_base_free(href, base, tier):
+    out = extract_routed_py(_page([href]), base, tier)
+    # the fast scan drops a leading '#' (fastpath.go:70); every other
+    # relative shape is kept and resolved against the base
+    assert bool(out["urls"]) != (tier == "fast" and href.startswith("#"))
+    assert not out["urls"] or out["base_free"] is False
 
 
 # --- cuckoo filter vs Bloom twin fuzz (VERDICT r04 next-round #8) ---------
