@@ -801,12 +801,14 @@ def q_crawl_frontier_bfs(spark, sf_dir):
 
 def q_crawl_frontier_bucketed(spark, sf_dir):
     """Flagship over a BUCKETED corpus table (sources/bucketed.py):
-    the corpus is materialized bucketBy(url_norm), and the crawl joins
-    on the stored bucket column (corpus_pre_keyed) as a sort-merge
-    join with broadcasting off — the gate executes the
-    zero-corpus-exchange scan path end-to-end (plan pinned in
-    tests/test_bucketed.py) and must reproduce the exact BFS the
-    in-memory flagship computes (same DuckDB recursive-CTE oracle)."""
+    the corpus is materialized bucketBy(url_norm) without a raw url
+    column, so the crawl takes it as pre-keyed and joins on the stored
+    bucket column; with broadcasting off (threshold -1) no scheduled
+    batch fits a broadcast, so every fetch join is a sort-merge join —
+    the gate executes the zero-corpus-exchange scan path end-to-end
+    (plan pinned in tests/test_bucketed.py) and must reproduce the
+    exact BFS the in-memory flagship computes (same DuckDB
+    recursive-CTE oracle)."""
     import shutil
     import tempfile
 
@@ -829,10 +831,7 @@ def q_crawl_frontier_bucketed(spark, sf_dir):
             spark,
             bucketed.read_bucketed_corpus(spark, "gate_bucketed_corpus"),
             seeds,
-            CrawlConfig(
-                corpus_pre_keyed=True,
-                broadcast_frontier=False,
-            ),
+            CrawlConfig(),
         )
         # the loop drives every superstep eagerly (localCheckpoint), so
         # seen is materialized — safe to drop the table + files now

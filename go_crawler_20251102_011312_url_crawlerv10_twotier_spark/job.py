@@ -14,7 +14,12 @@ On a cluster the session comes from spark-submit's conf (master,
 executors, shuffle partitions); ``--resume`` continues from the latest
 committed snapshot in --checkpoint-dir. The pages input is any table
 with (url, html) columns — parquet path or an Iceberg/catalog table
-name via --pages-table.
+name via --pages-table. A table with (url_norm, html) and no url
+column is taken as pre-keyed (e.g. a bucketed corpus written by
+sources.bucketed.write_bucketed_corpus): the crawl joins on its stored
+url_norm, so the scan's bucketing reaches the fetch join. Whether the
+fetch join broadcasts the scheduled batch follows its measured bytes
+against spark.sql.autoBroadcastJoinThreshold (spark-submit --conf).
 
 Replaces the reference's main() wiring (main.go:18-121): NIC detection,
 worker pools, fd limits and GC tuning (steps 1-3, 5-7 there) are
@@ -46,15 +51,6 @@ def parse_args(argv):
                    help="enforce robots.txt rules found in the corpus")
     p.add_argument("--use-bloom", action="store_true",
                    help="route the seen probe through the sharded-Bloom prefilter")
-    p.add_argument("--corpus-pre-keyed", action="store_true",
-                   help="pages table is already (url_norm, html) — normalized,"
-                   " body-capped, unique (e.g. a bucketed corpus written by"
-                   " sources.bucketed.write_bucketed_corpus); joins on the"
-                   " stored column so a bucketed scan's partitioning reaches"
-                   " the fetch join (zero corpus-side exchange)")
-    p.add_argument("--no-broadcast-frontier", action="store_true",
-                   help="sort-merge the fetch join instead of broadcasting the"
-                   " scheduled frontier (set at 10^10-scale iteration sizes)")
     p.add_argument("--checkpoint-dir", default=None)
     p.add_argument("--snapshot-keep", type=int, default=None,
                    help="retain only the last K committed snapshots"
@@ -62,7 +58,9 @@ def parse_args(argv):
                    " the moving horizon becomes unavailable)")
     p.add_argument("--resume", action="store_true", help="continue from the latest snapshot")
     p.add_argument("--output", default=None, help="write final seen/downloads parquet here")
-    p.add_argument("--url-col", default="url")
+    p.add_argument("--url-col", default="url",
+                   help="raw URL column; a pages table without it is read as"
+                   " pre-keyed (url_norm, html), e.g. a bucketed corpus")
     p.add_argument("--html-col", default="html")
     return p.parse_args(argv)
 
@@ -99,8 +97,6 @@ def main(argv=None) -> int:
         snapshot_keep=args.snapshot_keep,
         respect_robots=args.respect_robots,
         use_bloom=args.use_bloom,
-        corpus_pre_keyed=args.corpus_pre_keyed,
-        broadcast_frontier=not args.no_broadcast_frontier,
     )
     host_ranks = (
         spark.read.parquet(args.host_ranks_parquet)

@@ -33,10 +33,10 @@ Scale notes (100 TB / 10^10 frontier):
 * each page is extracted once per crawl()/resume() call, before the
   loop: routed on its own URL (its ``base``) and run through the
   python extract over the cached corpus, into a narrow link index
-  (url_norm, base, size, path, links, doc urls, base_free) cached at
-  the corpus's storage level. A superstep pays the python hand-off
-  (~0.3 s a job on a 4-vCPU box, whatever the row count) only when
-  the index cannot serve a row.
+  (url_norm, base, size, path, links, doc urls, base_free); the corpus
+  and the index are both cached MEMORY_AND_DISK. A superstep pays the
+  python hand-off (~0.3 s a job on a 4-vCPU box, whatever the row
+  count) only when the index cannot serve a row.
 * the extract depends on the raw URL that reached the page: it is the
   resolution base, and O1 routes on it. An index row therefore serves
   a frontier row iff the URL is the page's own, or the extract is
@@ -46,13 +46,18 @@ Scale notes (100 TB / 10^10 frontier):
   only when there are some does the superstep fetch them from the
   corpus and extract them live (relative links reached by a
   different spelling of the page's URL).
-* the per-iteration fetch join keeps the frontier on the probe side;
-  AQE broadcasts it while it fits, and flips to shuffled-hash with
-  skew splitting otherwise. On a real cluster the pages table is
-  bucketed by url_norm so the join prunes buckets instead of
-  rescanning; in the sandbox the synthesized corpus is persisted once
-  (the reference's response cache, O11) and its index is rescanned
-  per iteration.
+* the per-iteration fetch join follows the scheduled batch's MEASURED
+  bytes (url_norm + url, observed on the frontier, schedule and new
+  cuts): while they fit ``spark.sql.autoBroadcastJoinThreshold`` the
+  batch is the explicitly broadcast build side (BuildLeft) and the
+  cached index and corpus are only streamed; past it (or at -1) the
+  planner picks the join, a sort-merge join that exchanges the
+  frontier side only. The deferred split and the live join follow the
+  same decision. The corpus is persisted once (the reference's
+  response cache, O11); a pre-keyed corpus (no raw URL column, e.g. a
+  table bucketed by url_norm) keeps its scan partitioning.
+  Inside the loop only the live join reads the corpus; the fetch join
+  and the download probe read the index.
 * seen grows monotonically and never reaches the driver: candidate
   dedup is a shuffle on url_norm, the seen probe is a left-anti join.
   Its strategy follows seen's MEASURED key bytes (observed on each
@@ -111,18 +116,6 @@ from .checkpoint import SnapshotStore
 _norm = normalize_url_compat_col
 _host = host_of_col
 
-# rows per cached columnar batch while a DISK_ONLY corpus cache is
-# BUILT (spark.sql.inMemoryColumnarStorage.batchSize). Spark's
-# 10000-row default assumes narrow rows: at multi-KB html bodies one
-# in-flight batch is rows x body_size of transient heap PER BUILD TASK
-# (10000 x 20 KB = ~200 MB; x32 concurrent tasks = ~6 GB of pure build
-# churn on an 8 g heap). 1024 keeps build transients ~20 MB/task at
-# web-page row widths without hurting scan amortization (measured on
-# the 1 M-page build: 34 s at 1024 vs 42 s default — smaller
-# transients also GC cheaper).
-_DISK_BUILD_BATCH_ROWS = 1024
-
-
 @dataclass
 class CrawlConfig:
     max_depth: int = MAX_DEPTH  # config/config.go:7
@@ -136,11 +129,6 @@ class CrawlConfig:
     global_budget: int | None = None
     max_retries: int = MAX_RETRIES  # config/config.go:34
     checkpoint_dir: str | None = None
-    # broadcast the per-iteration frontier into the fetch join. True is
-    # right whenever one iteration's scheduled batch fits in memory
-    # (politeness-budgeted crawls always do); set False at 10^10-URL
-    # iteration sizes and let AQE pick SMJ against the bucketed corpus.
-    broadcast_frontier: bool = True
     # override the O1 coordinator: 'fast' | 'slow' routes every page
     # through one tier (the reference exposes the same knob via its
     # configurable thresholds, coordinator.go:135-142). None = O1 rules.
@@ -156,34 +144,6 @@ class CrawlConfig:
     # check can't see what the k-th superstep's carriers look like).
     # None (default) costs nothing.
     plan_hook: "object | None" = None
-    # StorageLevel NAME for the corpus cache (the corpus is always
-    # cached across iterations — the reference's response cache, O11).
-    # MEMORY_AND_DISK (default) is right while aggregate executor
-    # memory is a useful fraction of the corpus; DISK_ONLY is the
-    # honest level once the corpus dwarfs the heap — html bytes then
-    # never sit deserialized in executor memory,
-    # and the cache becomes exactly the reference's on-disk response
-    # cache (crawler_twotier.go cacheDir, O11): built once, re-read per
-    # superstep at sequential-scan cost. (The 1 M-page rehearsal's
-    # cache-build OOM that first motivated this knob turned out to be
-    # the serializer handle-table bug fixed session-wide — see
-    # session.py objectStreamReset; both levels now build 1 M pages in
-    # ~35-45 s on the 8 g heap. The knob stays: it is the right dial
-    # whenever corpus >> storage pool, where MEMORY_AND_DISK would
-    # evict-thrash through the serializer per superstep.)
-    # DISK_ONLY also builds the cache in 1024-row columnar batches
-    # (_DISK_BUILD_BATCH_ROWS).
-    cache_storage_level: str = "MEMORY_AND_DISK"
-    # the pages table is already keyed (url_norm, html) — normalized,
-    # body-capped, unique — e.g. a bucketed corpus table written by
-    # sources.bucketed.write_bucketed_corpus. The crawl then joins on
-    # the STORED url_norm column as-is: re-normalizing (a semantic
-    # no-op — idempotence is property-pinned) would wrap the bucket
-    # column in an expression and destroy the scan's hash
-    # outputPartitioning, forcing the corpus exchange the bucketing
-    # exists to eliminate. Without it the corpus is hash-repartitioned
-    # and deduplicated on url_norm during prep.
-    corpus_pre_keyed: bool = False
     # enforce robots.txt rules found in the corpus (operators/robots).
     # Default False: the REFERENCE ignores robots (IgnoreRobotsTxt,
     # crawler_twotier.go:56), so equivalence runs must too; the
@@ -234,12 +194,7 @@ class CrawlResult:
     iterations: int = 0
 
 
-def _prepare_pages(
-    pages: DataFrame,
-    url_col: str,
-    html_col: str,
-    pre_keyed: bool = False,
-) -> DataFrame:
+def _prepare_pages(pages: DataFrame, url_col: str, html_col: str) -> DataFrame:
     """Key the corpus by the compat-normalized URL and pre-truncate
     bodies to the 5 MB cap (a scan-side projection, done once). Each
     page keeps its own URL as ``base``, the URL its link-index row is
@@ -250,14 +205,16 @@ def _prepare_pages(
     cached frame keeps that outputPartitioning — so every
     per-iteration fetch join reuses it and only exchanges the (small)
     frontier side; the heavy html bytes are shuffled exactly once per
-    crawl, not once per iteration. A ``pre_keyed`` (bucketed, unique)
-    corpus is never shuffled at all — its scan already carries the
-    partitioning the join needs.
+    crawl, not once per iteration.
+
+    A pages table without ``url_col`` is pre-keyed: ``(url_norm,
+    html)``, normalized, body-capped and unique, as
+    sources.bucketed.write_bucketed_corpus writes it. It is never
+    shuffled: the stored url_norm is selected unwrapped (re-normalizing,
+    a semantic no-op, would wrap the bucket column in an expression and
+    drop the scan's hash partitioning, which the fetch join reuses).
     """
-    if pre_keyed:
-        # bucketed/pre-keyed corpus: url_norm is the stored bucket
-        # column — select it UNWRAPPED so the scan's hash partitioning
-        # survives to the fetch join (see CrawlConfig.corpus_pre_keyed)
+    if url_col not in pages.columns:
         return pages.select("url_norm", F.col("url_norm").alias("base"), "html")
     proj = pages.select(
         _norm(F.col(url_col)).alias("url_norm"),
@@ -338,14 +295,16 @@ def fetch_join(
     against the prepared corpus (or the crawl's link index built from
     it) on ``url_norm``.
 
-    The frontier side is broadcast explicitly: a planner-chosen build
-    side can flip onto the corpus (its ExistingRDD stats are unknown),
-    which would rebuild a hashed relation of every page body each
-    iteration. With the hint, the corpus cache is only ever streamed —
-    the html bytes NEVER cross an exchange (tests/test_plans.py pins
-    this). At 10^10 frontier sizes set ``broadcast_frontier=False``:
-    the cached/bucketed corpus partitioning then makes it a
-    frontier-side-only exchange SMJ.
+    With ``broadcast_frontier`` the frontier side is broadcast
+    explicitly: a planner-chosen build side can flip onto the corpus
+    (its ExistingRDD stats are unknown), which would rebuild a hashed
+    relation of every page body each iteration. With the hint, the
+    corpus cache is only ever streamed — the html bytes NEVER cross an
+    exchange (tests/test_plans.py pins this). Without it the planner
+    picks the join: against the cached (or bucketed) corpus
+    partitioning that is a frontier-side-only exchange sort-merge join.
+    The crawl loop broadcasts iff the scheduled batch's measured bytes
+    fit ``spark.sql.autoBroadcastJoinThreshold``.
     """
     sched_side = F.broadcast(scheduled) if broadcast_frontier else scheduled
     return sched_side.join(corpus, "url_norm", "inner")
@@ -384,50 +343,33 @@ def crawl(
     cfg = cfg or CrawlConfig()
     store = SnapshotStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
-    level = getattr(StorageLevel, cfg.cache_storage_level)
-
     def path_of(url, size):
         """O1: route on the body's BYTE length (the reference's Decide
         gets len(body) of a []byte), or force_path."""
         return F.lit(cfg.force_path) if cfg.force_path else route_decision_col(url, size)
 
-    corpus = _prepare_pages(pages, url_col, html_col, pre_keyed=cfg.corpus_pre_keyed)
+    corpus = _prepare_pages(pages, url_col, html_col)
     index = None
-    disk_only = cfg.cache_storage_level == "DISK_ONLY"
-    batch_conf = "spark.sql.inMemoryColumnarStorage.batchSize"
-    saved_batch = spark.conf.get(batch_conf, None)
     # the caches are released however the crawl ends
     try:
-        if disk_only:
-            # batchSize is read when the InMemoryRelation is planned
-            # (persist below), so set-before/restore-after scopes it to
-            # these caches only
-            spark.conf.set(batch_conf, str(_DISK_BUILD_BATCH_ROWS))
-        try:
-            corpus = corpus.persist(level)
-            # E1/E2 once per crawl: every page is extracted with its own
-            # URL as the base into a narrow link index (no html), cached
-            # at the corpus's level. extract_stage consumes html inside
-            # its mapInPandas hop and never emits it, so html bytes
-            # cross to python once per crawl, not once per superstep.
-            index = extract_stage(
-                corpus.select(
-                    "url_norm", "base", F.octet_length("html").alias("size"), "html"
-                ).withColumn("path", path_of(F.col("base"), F.col("size"))),
-                url_col="base",
-                html_col="html",
-            ).persist(level)
-            # materialize both caches NOW, in one deterministic job —
-            # otherwise the first iteration's join (or worse, an AQE
-            # broadcast-stage building a plan below the cache node)
-            # re-runs the corpus prep per branch
-            index.count()
-        finally:
-            if disk_only:
-                if saved_batch is None:
-                    spark.conf.unset(batch_conf)
-                else:
-                    spark.conf.set(batch_conf, saved_batch)
+        corpus = corpus.persist(StorageLevel.MEMORY_AND_DISK)
+        # E1/E2 once per crawl: every page is extracted with its own URL
+        # as the base into a narrow link index (no html). extract_stage
+        # consumes html inside its mapInPandas hop and never emits it,
+        # so html bytes cross to python once per crawl, not once per
+        # superstep.
+        index = extract_stage(
+            corpus.select(
+                "url_norm", "base", F.octet_length("html").alias("size"), "html"
+            ).withColumn("path", path_of(F.col("base"), F.col("size"))),
+            url_col="base",
+            html_col="html",
+        ).persist(StorageLevel.MEMORY_AND_DISK)
+        # materialize both caches NOW, in one deterministic job —
+        # otherwise the first iteration's join (or worse, an AQE
+        # broadcast-stage building a plan below the cache node) re-runs
+        # the corpus prep per branch
+        index.count()
 
         robots_df = None
         host_budgets = None
@@ -505,8 +447,12 @@ def crawl(
             frontier = filter_allowed(frontier, robots_df)
         n_rows = F.count(F.lit(1)).alias("n")
         key_bytes = F.sum(F.octet_length("url_norm")).alias("bytes")
-        frontier, got = _cut(frontier, "frontier0", None, n_rows)
-        n_frontier = got["n"]
+        # a frontier row's url_norm + url bytes size the scheduled batch
+        # that the fetch joins may broadcast; they ride the frontier,
+        # schedule and new cuts
+        url_bytes = F.sum(F.octet_length("url")).alias("url_bytes")
+        frontier, got = _cut(frontier, "frontier0", None, n_rows, key_bytes, url_bytes)
+        n_frontier, frontier_bytes = got["n"], got["bytes"] + got["url_bytes"]
         # seen's row count and key bytes ride its first cut; each superstep
         # adds those of its new rows (new is anti-joined against seen, so
         # the union adds no duplicate)
@@ -557,7 +503,7 @@ def crawl(
                 # everything schedules, nothing defers — skip the window
                 # entirely (and its cut)
                 scheduled, deferred = frontier, None
-                n_sched = n_frontier
+                n_sched, sched_bytes = n_frontier, frontier_bytes
             else:
                 scheduled, _ = schedule(
                     frontier,
@@ -570,15 +516,20 @@ def crawl(
                     cfg.plan_hook(it, "schedule", _physical_str(scheduled))
                 # cut the batch once, so the salted windows run only here
                 # and not again in the fetch join and the deferred split
-                scheduled, got = _cut(scheduled, f"iter{it + 1}_sched", ncoal, n_rows)
-                n_sched = got["n"]
+                scheduled, got = _cut(
+                    scheduled, f"iter{it + 1}_sched", ncoal, n_rows, key_bytes, url_bytes
+                )
+                n_sched, sched_bytes = got["n"], got["bytes"] + got["url_bytes"]
                 if n_sched == 0:
                     break  # a zero budget schedules nothing
+            # the seen probe's rule, applied to the scheduled batch: it is
+            # broadcast into the fetch join, the live join and the
+            # deferred split iff its measured bytes fit the limit
+            bc_sched = sched_bytes <= bc_limit
+            if budgeted:
                 keys = scheduled.select("url_norm")
                 deferred = frontier.join(
-                    F.broadcast(keys) if cfg.broadcast_frontier else keys,
-                    "url_norm",
-                    "left_anti",
+                    F.broadcast(keys) if bc_sched else keys, "url_norm", "left_anti"
                 )
             it += 1
             t_sched = time.time()
@@ -590,7 +541,7 @@ def crawl(
             # when its extract read no more of the base than the scheme
             # (base_free; equal url_norm means an equal lowercased
             # scheme) and that URL routes the page the same way.
-            hits = fetch_join(scheduled, index, cfg.broadcast_frontier)
+            hits = fetch_join(scheduled, index, bc_sched)
             if cfg.plan_hook is not None:
                 cfg.plan_hook(it, "fetch_join", _physical_str(hits))
             served = (F.col("url") == F.col("base")) | (
@@ -620,7 +571,7 @@ def crawl(
                 live = fetch_join(
                     idx.filter(F.col("path").isNull()).select("url_norm", "url", "depth"),
                     corpus,
-                    cfg.broadcast_frontier,
+                    bc_sched,
                 )
                 if cfg.plan_hook is not None:
                     cfg.plan_hook(it, "fetch_live", _physical_str(live))
@@ -701,14 +652,14 @@ def crawl(
                 new = filter_allowed(new, robots_df)
             if cfg.plan_hook is not None:
                 cfg.plan_hook(it, "seen_probe", _physical_str(new))
-            # the row count and key bytes ride the checkpoint action as an
+            # the row count and bytes ride the checkpoint action as an
             # observation — a separate count() job per superstep is pure
             # floor at scale
             new, got = _cut(
                 new.withColumn("priority", F.lit(False)).withColumn("retry", F.lit(0)),
-                f"iter{it}_new", ncoal, n_rows, key_bytes,
+                f"iter{it}_new", ncoal, n_rows, key_bytes, url_bytes,
             )
-            n_new = got["n"]
+            n_new, new_bytes = got["n"], got["bytes"] + got["url_bytes"]
             seen_bytes += got["bytes"]
             if bloom_bc is not None:
                 # new is checkpointed, so no later job reads the probe: free
@@ -727,7 +678,7 @@ def crawl(
                     download_log.advance_download_state(
                         ext.select(F.explode("docs").alias("url")),
                         dl,
-                        corpus.select(F.col("url_norm").alias("dl_norm")),
+                        index.select(F.col("url_norm").alias("dl_norm")),
                         it,
                         cfg.max_retries,
                     ),
@@ -743,7 +694,7 @@ def crawl(
             n_seen += n_new
             if deferred is None:
                 frontier = new
-                n_frontier = n_new
+                n_frontier, frontier_bytes = n_new, new_bytes
             else:
                 frontier, got = _cut(
                     deferred.unionByName(new), f"iter{it}_frontier", ncoal, n_rows
@@ -824,7 +775,8 @@ def resume(
     uninterrupted run (tested both ways in tests/test_frontier.py); its
     first commit drops the manifest entries above K and deletes the
     abandoned timeline's dirs."""
-    assert cfg.checkpoint_dir, "resume requires cfg.checkpoint_dir"
+    if not cfg.checkpoint_dir:
+        raise ValueError("resume requires cfg.checkpoint_dir")
     store = SnapshotStore(cfg.checkpoint_dir)
     last = store.latest_iter()
     if last is None:

@@ -251,17 +251,6 @@ def run_training_pipeline(
     # -- 1. crawl: frontier BFS; output = the seen table ------------
     crawl_extra: dict = {}
 
-    # default crawl config for THIS path is the corpus-dwarfs-memory
-    # shape (the pipeline exists for the 1 M-page / 100 TB story):
-    # DISK_ONLY response cache (built in small columnar batches) — html
-    # bytes never sit deserialized in the heap, so the crawl stage's
-    # footprint is independent of corpus size (the reference's on-disk
-    # response cache, crawler_twotier.go cacheDir). See
-    # CrawlConfig.cache_storage_level for the
-    # measured numbers. Callers that pass crawl_cfg keep full control.
-    if crawl_cfg is None:
-        crawl_cfg = CrawlConfig(cache_storage_level="DISK_ONLY")
-
     def do_crawl() -> DataFrame:
         res = crawl(spark, pages, seeds, crawl_cfg)
         sched = sum(m["scheduled"] for m in res.metrics)
@@ -559,9 +548,6 @@ def run_incremental_pipeline(
     def _gate():
         if stop_after is not None and r._idx >= stop_after:
             raise PipelineStopped(r._idx, r.stages)
-
-    if crawl_cfg is None:
-        crawl_cfg = CrawlConfig(cache_storage_level="DISK_ONLY")
 
     # -- 1. crawl: full — frontier/link graph is global ---------------
     crawl_extra: dict = {}

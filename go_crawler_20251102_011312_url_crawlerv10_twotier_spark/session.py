@@ -93,9 +93,9 @@ def get_spark(
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         # JavaSerializer's ObjectOutputStream keeps a handle table of
         # every object written and Spark only reset()s it every N
-        # objects (default 100). Disk-spilled RDD blocks — e.g. a
-        # DISK_ONLY corpus cache — stream CachedBatches through one such
-        # writer PER TASK, so the default pins the last ~100 batches'
+        # objects (default 100). Disk-spilled RDD blocks — e.g. the
+        # corpus cache once it spills — stream CachedBatches through one
+        # such writer PER TASK, so the default pins the last ~100 batches'
         # column arrays per concurrent task: measured 4.4 GB of dead-
         # but-referenced byte[] (old gen 99%, heap-histogram verified)
         # and a hard OOM on the 8 g heap while disk-caching a mere

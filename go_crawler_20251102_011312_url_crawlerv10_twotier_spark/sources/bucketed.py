@@ -14,9 +14,9 @@ Contract: the written table is pre-keyed — ``url_norm`` is already
 compat-normalized (idempotence is hypothesis-pinned in
 tests/test_properties.py, so re-normalizing would be a no-op
 semantically, but it would WRAP the bucket column in an expression and
-destroy the scan's outputPartitioning; ``CrawlConfig.corpus_pre_keyed``
-tells the crawl to join on the stored column as-is), bodies are
-pre-capped at the 5 MB tier-1 bound, and rows are unique per
+destroy the scan's outputPartitioning; the table has no raw ``url``
+column, which tells the crawl to join on the stored column as-is),
+bodies are pre-capped at the 5 MB tier-1 bound, and rows are unique per
 ``url_norm`` (deduped at write inside the bucket shuffle, so the crawl
 skips its own corpus dedup).
 
@@ -79,9 +79,9 @@ def write_bucketed_corpus(
 
 def read_bucketed_corpus(spark: SparkSession, name: str) -> DataFrame:
     """Read a corpus written by :func:`write_bucketed_corpus`. Pass the
-    result to ``crawl(..., CrawlConfig(corpus_pre_keyed=True,
-    broadcast_frontier=False))`` for the zero-corpus-exchange
-    sort-merge fetch join (broadcast_frontier=True also works and
-    ignores the bucketing — right when one iteration's scheduled batch
-    fits in memory)."""
+    result to ``crawl`` as its pages: with no ``url`` column it is
+    taken as pre-keyed. A superstep whose scheduled batch exceeds
+    ``spark.sql.autoBroadcastJoinThreshold`` then runs the
+    zero-corpus-exchange sort-merge fetch join; one whose batch fits
+    broadcasts the batch and ignores the bucketing."""
     return spark.table(name)

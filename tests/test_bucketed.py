@@ -68,7 +68,6 @@ def test_fetch_join_zero_corpus_exchange(spark, corpus_table):
         bucketed.read_bucketed_corpus(spark, corpus_table),
         "url",
         "html",
-        pre_keyed=True,
     )
     sched = spark.createDataFrame([(SEED,)], "url_norm string")
     with _no_broadcast(spark):
@@ -98,10 +97,7 @@ def test_bucketed_crawl_same_result(spark, corpus_table):
             spark,
             bucketed.read_bucketed_corpus(spark, corpus_table),
             seeds,
-            CrawlConfig(
-                corpus_pre_keyed=True,
-                broadcast_frontier=False,
-            ),
+            CrawlConfig(),
         )
         got = {(r.url_norm, r.depth) for r in res.seen.collect()}
         got_dl = sorted((r.url, r.status, r.retry) for r in res.downloads.collect())

@@ -195,6 +195,13 @@ def test_resume_time_travel(spark, full):
     assert got_dl == sorted(full["downloads"])
 
 
+def test_resume_without_checkpoint_dir_raises(spark):
+    """resume() without a snapshot store is a caller error, reported
+    as such (and kept under ``python -O``)."""
+    with pytest.raises(ValueError, match="checkpoint_dir"):
+        resume(spark, quirk_pages(spark), CrawlConfig())
+
+
 def test_metrics_shape(full):
     m1 = full["metrics"][0]
     assert m1["scheduled"] == 1 and m1["fetched"] == 1
@@ -348,6 +355,25 @@ def test_bloom_sizing_tracks_seen(spark, monkeypatch, bloom_branch):
     assert res.iterations == 4 and sum(new) > 0
     assert calls == [1 + sum(new[:i]) for i in range(len(new))]
     assert res.seen.count() == 1 + sum(new)
+
+
+def test_fetch_joins_follow_broadcast_limit(spark, full, bloom_branch):
+    """The scheduled batch is broadcast into the fetch joins only while
+    its measured bytes fit spark.sql.autoBroadcastJoinThreshold: at -1
+    neither the link-index join nor the live corpus join plans a
+    BroadcastHashJoin, and the crawl is the default crawl."""
+    plans = []
+    res = run_engine(
+        spark,
+        CrawlConfig(plan_hook=lambda it, stage, plan: plans.append((stage, plan))),
+    )
+    fetches = [p for stage, p in plans if stage in ("fetch_join", "fetch_live")]
+    assert any(stage == "fetch_live" for stage, _ in plans)
+    assert len(fetches) > res.iterations
+    assert not [p for p in fetches if "BroadcastHashJoin" in p]
+    assert {(r.url_norm, r.depth) for r in res.seen.collect()} == full["seen"]
+    got_dl = sorted((r.url, r.status, r.retry) for r in res.downloads.collect())
+    assert got_dl == sorted(full["downloads"])
 
 
 def test_every_config_knob_is_read():
