@@ -107,7 +107,8 @@ def main(argv=None) -> int:
     if args.resume:
         if not args.checkpoint_dir:
             raise SystemExit("--resume requires --checkpoint-dir")
-        res = resume(spark, pages, cfg, url_col=args.url_col, html_col=args.html_col)
+        res = resume(spark, pages, cfg, url_col=args.url_col, html_col=args.html_col,
+                     host_ranks=host_ranks)
     else:
         if args.seeds_parquet:
             seeds = spark.read.parquet(args.seeds_parquet)

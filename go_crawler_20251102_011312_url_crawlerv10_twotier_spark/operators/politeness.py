@@ -10,15 +10,19 @@ ordering per the north_rule; unscheduled rows stay in the frontier
 backlog (no drops — unlike the reference's 50-attempt
 PersistentEnqueue fallback, downloader.go:253-277).
 
+``tag_schedule`` tags each row scheduled or deferred, so the batch and
+the backlog are two filters of one frame (``schedule`` returns them).
+
 Skew: mega-domains (~1/3 of all URLs on one host in the fixture) make
 a naive ``row_number() OVER (PARTITION BY host)`` a single-task
-hotspot at 10^10 scale. ``schedule`` therefore runs a salted two-phase
+hotspot at 10^10 scale. ``tag_schedule`` therefore runs a salted two-phase
 top-K: phase 1 ranks within ``(host, salt)`` — parallel across salts —
 and keeps at most ``budget`` rows per salted group; phase 2 re-ranks
 the survivors (≤ budget × n_salts rows per host, tiny) to pick the
-exact global top-``budget`` per host. Result is identical to the
-naive window, but the heavy sort never sees a whole mega-host in one
-partition.
+exact global top-``budget`` per host; phase-1 losers are tagged
+deferred without a second rank. Result is identical to the naive
+window, but the heavy sort never sees a whole mega-host in one
+partition, and both branches read one phase-1 exchange.
 """
 
 from __future__ import annotations
@@ -29,12 +33,74 @@ from pyspark.sql import functions as F
 DEFAULT_SALTS = 16
 
 
-def _order_cols(df_priority: bool):
-    cols = []
-    if df_priority:
-        cols.append(F.col("priority").desc())
-    cols += [F.col("depth").asc(), F.col("url_norm").asc()]
-    return cols
+def _order_cols(df: DataFrame) -> list:
+    """(priority DESC,) depth ASC, url_norm ASC — the priority term when
+    ``df`` carries the column."""
+    cols = [F.col("depth").asc(), F.col("url_norm").asc()]
+    return [F.col("priority").desc(), *cols] if "priority" in df.columns else cols
+
+
+def tag_schedule(
+    frontier: DataFrame,
+    budget_per_host: int | None,
+    n_salts: int = DEFAULT_SALTS,
+    host_ranks: DataFrame | None = None,
+    global_budget: int | None = None,
+    host_budgets: DataFrame | None = None,
+) -> DataFrame:
+    """``frontier`` plus a boolean ``scheduled``: True on the rows this
+    iteration's budgets admit, False on the deferred rest; each input
+    row once, in the input's column order. ``frontier`` needs host,
+    url_norm, depth and optionally priority (boolean). No budget at all
+    => every row is scheduled.
+
+    ``host_budgets`` (host, budget), one small row per host, broadcast:
+    overrides ``budget_per_host`` for its hosts (e.g. robots Crawl-delay
+    via robots.delay_budgets); None = unbounded for the rest.
+
+    ``global_budget`` caps the WHOLE iteration: the per-host batch is
+    trimmed to its global top-N by ``(priority DESC, host_rank DESC,
+    depth ASC, url_norm ASC)`` — the north_rule's crawl-depth + host-rank
+    priority queue. ``host_ranks``: optional (host, host_rank double),
+    one row per host, broadcast; unranked hosts rank 0. The top-N keys
+    compile to ``TakeOrderedAndProject`` (never a global sort) and come
+    back as one broadcast membership join. url_norm is unique within a
+    frontier, so the cut is deterministic.
+    """
+    cols = frontier.columns
+    if budget_per_host is None and host_budgets is None:
+        tagged = frontier.withColumn("scheduled", F.lit(True))
+    else:
+        if host_budgets is not None:
+            frontier = frontier.join(
+                F.broadcast(host_budgets.select("host", F.col("budget").alias("_hb"))),
+                "host",
+                "left",
+            ).withColumn(
+                "_budget", F.coalesce("_hb", F.lit(budget_per_host).cast("int"))
+            )
+            keep = lambda rn: F.col("_budget").isNull() | (rn <= F.col("_budget"))  # noqa: E731
+        else:
+            # not rank <= budget: a rank compared with a literal lets the
+            # optimizer push a WindowGroupLimit under the survivors' window
+            # only, which gives that branch its own phase-1 exchange
+            keep = lambda rn: rn - 1 < F.lit(int(budget_per_host))  # noqa: E731
+        order = _order_cols(frontier)
+        w1 = Window.partitionBy("host", "_salt").orderBy(*order)
+        phase1 = frontier.withColumn(
+            "_salt", F.pmod(F.xxhash64("url_norm"), F.lit(n_salts))
+        ).withColumn("_r1", F.row_number().over(w1))
+        # phase-1 losers are deferred; survivors are tagged by their
+        # per-host rank. Both branches read the one phase-1 exchange.
+        w2 = Window.partitionBy("host").orderBy(*order)
+        tagged = phase1.filter(keep(F.col("_r1"))).withColumn(
+            "scheduled", keep(F.row_number().over(w2))
+        ).unionByName(
+            phase1.filter(~keep(F.col("_r1"))).withColumn("scheduled", F.lit(False))
+        )
+    if global_budget is not None:
+        tagged = _global_trim(tagged, host_ranks, global_budget)
+    return tagged.select(*cols, "scheduled")
 
 
 def schedule(
@@ -45,98 +111,38 @@ def schedule(
     global_budget: int | None = None,
     host_budgets: DataFrame | None = None,
 ) -> tuple[DataFrame, DataFrame]:
-    """Split ``frontier`` into (scheduled, deferred) under the per-host
-    budget. ``frontier`` needs columns: host, url_norm, depth, and
-    optionally priority (boolean). budget None => everything scheduled.
-
-    ``global_budget`` additionally caps the WHOLE iteration: after the
-    per-host cut, the batch is trimmed to the global top-N by
-    ``(priority DESC, host_rank DESC, depth ASC, url_norm ASC)`` —
-    the north_rule's crawl-depth + host-rank priority queue.
-    ``host_ranks`` is an optional small (host, host_rank double) table
-    (e.g. harmonic-centrality or in-link scores); it is broadcast, and
-    unranked hosts default to rank 0. The trim compiles to
-    ``TakeOrderedAndProject`` (per-partition top-N, merge on driver-side
-    limit — never a global sort), so it is exactly as scale-safe as the
-    engine's other top-K paths. Ties are impossible: url_norm is unique
-    within a frontier, so the cut is deterministic.
-    """
-    if budget_per_host is None and global_budget is None and host_budgets is None:
-        return frontier, frontier.limit(0)
-    if budget_per_host is None and host_budgets is None:
-        scheduled = _global_trim(frontier, host_ranks, global_budget)
-        deferred = frontier.join(
-            scheduled.select("url_norm"), "url_norm", "left_anti"
-        )
-        return scheduled, deferred
-
-    has_priority = "priority" in frontier.columns
-    order = _order_cols(has_priority)
-
-    # per-host budget override (e.g. robots Crawl-delay converted via
-    # robots.delay_budgets): hosts in the table use their own budget,
-    # the rest fall back to budget_per_host (None = unbounded). The
-    # table is one small row per host — broadcast, no frontier shuffle.
-    orig_frontier = frontier
-    if host_budgets is not None:
-        default_b = (
-            F.lit(int(budget_per_host))
-            if budget_per_host is not None
-            else F.lit(None).cast("int")
-        )
-        frontier = frontier.join(
-            F.broadcast(
-                host_budgets.select("host", F.col("budget").alias("_hb"))
-            ),
-            "host",
-            "left",
-        ).withColumn("_budget", F.coalesce(F.col("_hb"), default_b)).drop("_hb")
-        keep = lambda rn: F.col("_budget").isNull() | (rn <= F.col("_budget"))  # noqa: E731
-    else:
-        keep = lambda rn: rn <= F.lit(int(budget_per_host))  # noqa: E731
-
-    salted = frontier.withColumn(
-        "_salt", F.pmod(F.xxhash64("url_norm"), F.lit(n_salts))
+    """(scheduled, deferred): the two filters of :func:`tag_schedule`'s
+    frame, so they partition ``frontier`` and keep its column order."""
+    tagged = tag_schedule(
+        frontier, budget_per_host, n_salts, host_ranks, global_budget, host_budgets
     )
-    w1 = Window.partitionBy("host", "_salt").orderBy(*order)
-    phase1 = (
-        salted.withColumn("_r1", F.row_number().over(w1))
-        .filter(keep(F.col("_r1")))
-        .drop("_r1")
+    scheduled = F.col("scheduled")
+    return (
+        tagged.filter(scheduled).drop("scheduled"),
+        tagged.filter(~scheduled).drop("scheduled"),
     )
-    w2 = Window.partitionBy("host").orderBy(*order)
-    ranked = phase1.withColumn("_r2", F.row_number().over(w2)).drop("_salt")
-    scheduled = ranked.filter(keep(F.col("_r2"))).drop("_r2")
-    if host_budgets is not None:
-        scheduled = scheduled.drop("_budget")
-    if global_budget is not None:
-        scheduled = _global_trim(scheduled, host_ranks, global_budget)
-
-    # deferred = frontier minus scheduled (anti-join on the dedup key;
-    # url_norm is unique within a frontier by construction)
-    deferred = orig_frontier.join(
-        scheduled.select("url_norm"), "url_norm", "left_anti"
-    )
-    return scheduled, deferred
 
 
 def _global_trim(
-    batch: DataFrame, host_ranks: DataFrame | None, global_budget: int
+    tagged: DataFrame, host_ranks: DataFrame | None, global_budget: int
 ) -> DataFrame:
-    """Global top-``global_budget`` of a scheduled batch by
-    (priority DESC, host_rank DESC, depth, url_norm)."""
-    cols = []
-    if "priority" in batch.columns:
-        cols.append(F.col("priority").desc())
-    with_rank = host_ranks is not None
-    if with_rank:
+    """Keep ``scheduled`` on the global top-``global_budget`` of the
+    scheduled rows by (priority DESC, host_rank DESC, depth, url_norm)."""
+    batch = tagged.filter(F.col("scheduled"))
+    order = _order_cols(batch)
+    if host_ranks is not None:
         batch = batch.join(
             F.broadcast(host_ranks.select("host", "host_rank")), "host", "left"
-        ).withColumn("host_rank", F.coalesce("host_rank", F.lit(0.0)))
-        cols.append(F.col("host_rank").desc())
-    cols += [F.col("depth").asc(), F.col("url_norm").asc()]
-    out = batch.orderBy(*cols).limit(global_budget)
-    return out.drop("host_rank") if with_rank else out
+        )
+        order.insert(-2, F.coalesce("host_rank", F.lit(0.0)).desc())
+    top = batch.orderBy(*order).limit(global_budget).select(
+        "url_norm", F.lit(True).alias("_top")
+    )
+    return (
+        tagged.drop("scheduled")
+        .join(F.broadcast(top), "url_norm", "left")
+        .withColumn("scheduled", F.col("_top").isNotNull())
+    )
 
 
 def priority_order(frontier: DataFrame) -> DataFrame:
@@ -144,10 +150,7 @@ def priority_order(frontier: DataFrame) -> DataFrame:
     priority, FIFO ≈ deterministic tiebreak): priority DESC, depth,
     url_norm. Sorted *within partitions* after repartitioning by host —
     a total sort is never needed for scheduling, so no global shuffle."""
-    has_priority = "priority" in frontier.columns
-    return frontier.repartition("host").sortWithinPartitions(
-        *_order_cols(has_priority)
-    )
+    return frontier.repartition("host").sortWithinPartitions(*_order_cols(frontier))
 
 
 def schedule_by_domain(
@@ -204,8 +207,6 @@ def dispatch_timeline(
     each host's rows per window, which is exactly what bounds the
     window task. Output: (url_norm, host, depth, slot, fetch_at_ms).
     """
-    from pyspark.sql.window import Window
-
     if delays is not None:
         dm = delays.select(
             "host",
@@ -214,10 +215,7 @@ def dispatch_timeline(
         fr = frontier.join(F.broadcast(dm), "host", "left")
     else:
         fr = frontier.withColumn("_dms", F.lit(None).cast("bigint"))
-    order = [F.col("depth").asc(), F.col("url_norm").asc()]
-    if "priority" in frontier.columns:
-        order = [F.col("priority").desc(), *order]
-    w = Window.partitionBy("host").orderBy(*order)
+    w = Window.partitionBy("host").orderBy(*_order_cols(frontier))
     slot = (F.row_number().over(w) - 1).cast("bigint")
     return fr.select(
         "url_norm",

@@ -7,10 +7,12 @@ declarative plan per iteration:
 
     pages --route (O1)--> fast|slow --extract (E1/E2)--> link index
                                             (once per crawl() call)
-    frontier --politeness--> scheduled --join link index--> links + docs
+    frontier --politeness tag--> scheduled | deferred
+    scheduled --join link index--> links + docs
       --normalize (P1)--> candidates --dedup + anti-join seen (J1)-->
-      new frontier; docs --anti-join downloads (J2) + retry (C5)-->
-      download state (one frame: closed rows + status-NULL retry queue)
+      new; next frontier = deferred ∪ new
+    docs --anti-join downloads (J2) + retry (C5)--> download state
+      (one frame: closed rows + status-NULL retry queue)
 
 Semantics vs the reference (SURVEY.md §5.2, §7):
 * seen is keyed on the COMPAT-normalized URL (utils/utils.go:14-18)
@@ -19,8 +21,9 @@ Semantics vs the reference (SURVEY.md §5.2, §7):
 * the reference's discovery order is racy (async goroutines); the
   engine's contract is per-depth set equality with min-depth
   semantics and a deterministic raw-URL tiebreak
-  (min(child_depth, url) per url_norm) — "first writer wins" made
-  deterministic.
+  (min(depth, url, host) per url_norm, for seeds and candidates
+  alike) — "first writer wins" made deterministic. A frontier row is
+  (url_norm, url, host, depth).
 * a page at depth d spawns children iff d < MAX_DEPTH (F1,
   crawler_twotier.go:194); children get depth d+1.
 * the body cap truncates (colly MaxBodySize reads at most 5 MB —
@@ -47,13 +50,13 @@ Scale notes (100 TB / 10^10 frontier):
   corpus and extract them live (relative links reached by a
   different spelling of the page's URL).
 * the per-iteration fetch join follows the scheduled batch's MEASURED
-  bytes (url_norm + url, observed on the frontier, schedule and new
-  cuts): while they fit ``spark.sql.autoBroadcastJoinThreshold`` the
-  batch is the explicitly broadcast build side (BuildLeft) and the
+  bytes (url_norm + url, observed on the first frontier, schedule and
+  new cuts): while they fit ``spark.sql.autoBroadcastJoinThreshold``
+  the batch is the explicitly broadcast build side (BuildLeft) and the
   cached index and corpus are only streamed; past it (or at -1) the
   planner picks the join, a sort-merge join that exchanges the
-  frontier side only. The deferred split and the live join follow the
-  same decision. The corpus is persisted once (the reference's
+  frontier side only. The live join follows the same decision. The
+  corpus is persisted once (the reference's
   response cache, O11); a pre-keyed corpus (no raw URL column, e.g. a
   table bucketed by url_norm) keeps its scan partitioning.
   Inside the loop only the live join reads the corpus; the fetch join
@@ -70,9 +73,11 @@ Scale notes (100 TB / 10^10 frontier):
   no Bloom state crosses supersteps. Otherwise the planner picks the
   join (Spark's runtime Bloom-filter join pruning is on in
   session.py).
-* a budgeted superstep cuts its scheduled batch once: the politeness
-  windows run in that cut only, and the fetch join and the deferred
-  split (a broadcast anti-join of the frontier) read it.
+* a budgeted superstep cuts its frontier once, tagged by
+  politeness.tag_schedule (the windows run only there); the scheduled
+  batch and the deferred rows are filters of the cut, which carries
+  the batch's count and bytes. The next frontier, deferred ∪ new, is
+  never cut; its figures follow by arithmetic.
 * lineage is truncated every iteration (localCheckpoint) or committed
   durably through plans/checkpoint.SnapshotStore for resume: each
   commit writes new data dirs and atomically replaces one manifest
@@ -104,7 +109,7 @@ from ..functions.urlnorm import host_of_col, normalize_url_compat_col
 from ..operators import dedup as dedup_ops
 from ..operators import download_log
 from ..operators.extract import extract_stage
-from ..operators.politeness import schedule
+from ..operators.politeness import tag_schedule
 from .checkpoint import SnapshotStore
 
 # P1 normalization and host extraction in the loop are pure Catalyst
@@ -310,20 +315,26 @@ def fetch_join(
     return sched_side.join(corpus, "url_norm", "inner")
 
 
+def _first_writer(rows: DataFrame) -> DataFrame:
+    """One frontier row ``(url_norm, url, host, depth)`` per url_norm of
+    ``rows``: the min ``(depth, url, host)``, the engine's deterministic
+    first writer."""
+    return (
+        rows.groupBy("url_norm")
+        .agg(F.min(F.struct("depth", "url", "host")).alias("m"))
+        .select("url_norm", "m.url", "m.host", "m.depth")
+    )
+
+
 def _seed_frontier(seeds: DataFrame) -> DataFrame:
     """seeds(url, depth) -> frontier rows with norm/host, deduped."""
-    s = seeds.select(
-        F.col("url"),
-        _norm(F.col("url")).alias("url_norm"),
-        _host(F.col("url")).alias("host"),
-        F.col("depth").cast("int").alias("depth"),
-        F.lit(False).alias("priority"),
-        F.lit(0).alias("retry"),
-    ).filter(host_present(F.col("host")))
-    return (
-        s.groupBy("url_norm")
-        .agg(F.min(F.struct("depth", "url", "host", "priority", "retry")).alias("m"))
-        .select("url_norm", "m.url", "m.host", "m.depth", "m.priority", "m.retry")
+    return _first_writer(
+        seeds.select(
+            F.col("url"),
+            _norm(F.col("url")).alias("url_norm"),
+            _host(F.col("url")).alias("host"),
+            F.col("depth").cast("int").alias("depth"),
+        ).filter(host_present(F.col("host")))
     )
 
 
@@ -448,8 +459,8 @@ def crawl(
         n_rows = F.count(F.lit(1)).alias("n")
         key_bytes = F.sum(F.octet_length("url_norm")).alias("bytes")
         # a frontier row's url_norm + url bytes size the scheduled batch
-        # that the fetch joins may broadcast; they ride the frontier,
-        # schedule and new cuts
+        # that the fetch joins may broadcast; they ride the first
+        # frontier and new cuts (the schedule cut sums its batch's)
         url_bytes = F.sum(F.octet_length("url")).alias("url_bytes")
         frontier, got = _cut(frontier, "frontier0", None, n_rows, key_bytes, url_bytes)
         n_frontier, frontier_bytes = got["n"], got["bytes"] + got["url_bytes"]
@@ -500,12 +511,11 @@ def crawl(
         while it < cfg.max_iterations and n_frontier > 0:
             t0 = time.time()
             if not budgeted:
-                # everything schedules, nothing defers — skip the window
-                # entirely (and its cut)
-                scheduled, deferred = frontier, None
+                # everything schedules, nothing defers: no window, no cut
+                tagged = frontier.withColumn("scheduled", F.lit(True))
                 n_sched, sched_bytes = n_frontier, frontier_bytes
             else:
-                scheduled, _ = schedule(
+                tagged = tag_schedule(
                     frontier,
                     cfg.budget_per_host,
                     host_ranks=host_ranks,
@@ -513,24 +523,24 @@ def crawl(
                     host_budgets=host_budgets,
                 )
                 if cfg.plan_hook is not None:
-                    cfg.plan_hook(it, "schedule", _physical_str(scheduled))
-                # cut the batch once, so the salted windows run only here
-                # and not again in the fetch join and the deferred split
-                scheduled, got = _cut(
-                    scheduled, f"iter{it + 1}_sched", ncoal, n_rows, key_bytes, url_bytes
+                    cfg.plan_hook(it, "schedule", _physical_str(tagged))
+                # cut the tagged frontier once: the salted windows run only
+                # here, the scheduled batch and the deferred rows are
+                # filters of the cut, and the batch's figures ride it
+                batch_bytes = F.octet_length("url_norm") + F.octet_length("url")
+                tagged, got = _cut(
+                    tagged, f"iter{it + 1}_sched", ncoal,
+                    F.count(F.when(F.col("scheduled"), 1)).alias("n"),
+                    F.sum(F.when(F.col("scheduled"), batch_bytes)).alias("bytes"),
                 )
-                n_sched, sched_bytes = got["n"], got["bytes"] + got["url_bytes"]
+                n_sched, sched_bytes = got["n"], got["bytes"]
                 if n_sched == 0:
                     break  # a zero budget schedules nothing
+            scheduled = tagged.filter(F.col("scheduled")).drop("scheduled")
             # the seen probe's rule, applied to the scheduled batch: it is
-            # broadcast into the fetch join, the live join and the
-            # deferred split iff its measured bytes fit the limit
+            # broadcast into the fetch join and the live join iff its
+            # measured bytes fit the limit
             bc_sched = sched_bytes <= bc_limit
-            if budgeted:
-                keys = scheduled.select("url_norm")
-                deferred = frontier.join(
-                    F.broadcast(keys) if bc_sched else keys, "url_norm", "left_anti"
-                )
             it += 1
             t_sched = time.time()
 
@@ -590,38 +600,28 @@ def crawl(
             cand = (
                 ext.filter(F.col("depth") < cfg.max_depth)
                 .select(
-                    F.explode("links").alias("href"),
-                    (F.col("depth") + 1).alias("cdepth"),
+                    F.explode("links").alias("url"),
+                    (F.col("depth") + 1).alias("depth"),
                 )
-                .withColumn("c_norm", _norm(F.col("href")))
-                .withColumn("c_host", _host(F.col("href")))
+                .withColumn("url_norm", _norm(F.col("url")))
+                .withColumn("host", _host(F.col("url")))
             )
             if redirect_map is not None:
                 cand = (
                     cand.join(
                         F.broadcast(redirect_map),
-                        cand.c_norm == redirect_map.src_norm,
+                        cand.url_norm == redirect_map.src_norm,
                         "left",
                     )
                     .filter(F.col("src_norm").isNull() | F.col("r_ok"))
                     .select(
-                        F.coalesce("r_final", "href").alias("href"),
-                        (F.coalesce("r_final_norm", "c_norm")).alias("c_norm"),
-                        (F.coalesce("r_final_host", "c_host")).alias("c_host"),
-                        "cdepth",
+                        F.coalesce("r_final", "url").alias("url"),
+                        F.coalesce("r_final_norm", "url_norm").alias("url_norm"),
+                        F.coalesce("r_final_host", "host").alias("host"),
+                        "depth",
                     )
                 )
-            cand = cand.filter(host_present(F.col("c_host")))
-            deduped = (
-                cand.groupBy("c_norm")
-                .agg(F.min(F.struct("cdepth", "href", "c_host")).alias("m"))
-                .select(
-                    F.col("c_norm").alias("url_norm"),
-                    F.col("m.href").alias("url"),
-                    F.col("m.c_host").alias("host"),
-                    F.col("m.cdepth").alias("depth"),
-                )
-            )
+            deduped = _first_writer(cand.filter(host_present(F.col("host"))))
             # J1: the crawl-seen anti-join (crawler_twotier.go:195,224-245).
             # While seen's measured key bytes fit the broadcast limit, seen's
             # keys are broadcast into the exact join: the planner alone
@@ -655,10 +655,7 @@ def crawl(
             # the row count and bytes ride the checkpoint action as an
             # observation — a separate count() job per superstep is pure
             # floor at scale
-            new, got = _cut(
-                new.withColumn("priority", F.lit(False)).withColumn("retry", F.lit(0)),
-                f"iter{it}_new", ncoal, n_rows, key_bytes, url_bytes,
-            )
+            new, got = _cut(new, f"iter{it}_new", ncoal, n_rows, key_bytes, url_bytes)
             n_new, new_bytes = got["n"], got["bytes"] + got["url_bytes"]
             seen_bytes += got["bytes"]
             if bloom_bc is not None:
@@ -692,14 +689,15 @@ def crawl(
             # plan re-executes per consumer and costs more than the cut
             seen = seen.unionByName(seen_delta).coalesce(ncoal).localCheckpoint(eager=True)
             n_seen += n_new
-            if deferred is None:
-                frontier = new
-                n_frontier, frontier_bytes = n_new, new_bytes
-            else:
-                frontier, got = _cut(
-                    deferred.unionByName(new), f"iter{it}_frontier", ncoal, n_rows
-                )
-                n_frontier = got["n"]
+            # the next frontier, the deferred rows ∪ new, reads existing cuts
+            # and is never cut itself; its figures follow by arithmetic.
+            # With nothing deferred it is new alone, so an unbudgeted
+            # frontier's plan does not chain across supersteps.
+            n_frontier += n_new - n_sched
+            frontier_bytes += new_bytes - sched_bytes
+            frontier = new
+            if n_frontier > n_new:
+                frontier = tagged.filter(~F.col("scheduled")).drop("scheduled").unionByName(new)
 
             metrics.append(
                 {
@@ -764,6 +762,7 @@ def resume(
     html_col: str = "html",
     as_of: int | None = None,
     redirects: DataFrame | None = None,
+    host_ranks: DataFrame | None = None,
 ) -> CrawlResult:
     """Resume a checkpointed crawl from its latest committed snapshot,
     or — Iceberg-style time travel — from ANY earlier retained
@@ -816,4 +815,5 @@ def resume(
         start_iter=last,
         initial_downloads=dl0,
         redirects=redirects,
+        host_ranks=host_ranks,
     )

@@ -195,6 +195,74 @@ def test_resume_time_travel(spark, full):
     assert got_dl == sorted(full["downloads"])
 
 
+def test_resume_keeps_host_ranks(spark, sf_small):
+    """resume() forwards host_ranks to the crawl it re-enters: a
+    rank-ordered, globally budgeted crawl interrupted after 3 supersteps
+    and resumed to 8 equals the uninterrupted 8-superstep crawl row for
+    row, iteration numbers included."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.ranks import (
+        host_edges,
+        host_pagerank,
+    )
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.sources import (
+        pages as pagesrc,
+    )
+
+    pages = pagesrc.synth_clean_pages(spark, sf_small)
+    seeds = spark.sql(pagesrc.seeds_sql())
+    ranks = host_pagerank(host_edges(pages)).localCheckpoint(eager=True)
+    cfg = {"max_depth": 50, "global_budget": 25, "max_iterations": 8}
+
+    def rows(res):
+        cols = ("url_norm", "url", "host", "depth", "iter")
+        return sorted(tuple(r) for r in res.seen.select(*cols).collect())
+
+    full_run = crawl(spark, pages, seeds, CrawlConfig(**cfg), host_ranks=ranks)
+    with tempfile.TemporaryDirectory() as ck:
+        crawl(
+            spark, pages, seeds,
+            CrawlConfig(**{**cfg, "max_iterations": 3}, checkpoint_dir=ck),
+            host_ranks=ranks,
+        )
+        res = resume(
+            spark, pages, CrawlConfig(**cfg, checkpoint_dir=ck), host_ranks=ranks
+        )
+        got = rows(res)
+    assert res.iterations == full_run.iterations == 8
+    assert got == rows(full_run)
+
+
+def test_budgeted_loop_cuts_no_frontier(spark, monkeypatch):
+    """A budgeted superstep cuts its tagged frontier once; the next
+    frontier is deferred ∪ new, two filters over existing cuts, and is
+    never cut itself. Every committed frontier holds exactly the
+    frontier columns."""
+    from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans import (
+        frontier as fr,
+    )
+
+    names = []
+    cut = fr._cut
+
+    def recording_cut(df, name, *args):
+        names.append(name)
+        return cut(df, name, *args)
+
+    monkeypatch.setattr(fr, "_cut", recording_cut)
+    with tempfile.TemporaryDirectory() as ck:
+        res = run_engine(
+            spark, CrawlConfig(budget_per_host=2, max_iterations=5, checkpoint_dir=ck)
+        )
+        store = SnapshotStore(ck)
+        assert store.latest_iter() == res.iterations == 5
+        cols = [
+            store.read_frontier(spark, k).columns for k in range(res.iterations + 1)
+        ]
+    assert any(n.endswith("_sched") for n in names)
+    assert not [n for n in names if n.endswith("_frontier")]
+    assert cols == [["url_norm", "url", "host", "depth"]] * (res.iterations + 1)
+
+
 def test_resume_without_checkpoint_dir_raises(spark):
     """resume() without a snapshot store is a caller error, reported
     as such (and kept under ``python -O``)."""

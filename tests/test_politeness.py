@@ -1,12 +1,14 @@
 """Per-host budget scheduling: exactness of the salted two-phase
 top-K vs the naive window, and ordering semantics."""
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.politeness import (
     priority_order,
     schedule,
+    tag_schedule,
 )
 
 
@@ -27,6 +29,35 @@ def test_budget_counts(spark):
     assert all(v == 5 for v in per_host.values())
     assert sched.count() + deferred.count() == f.count()
     # scheduled ∩ deferred = ∅
+    assert sched.join(deferred, "url_norm", "inner").count() == 0
+
+
+@pytest.mark.parametrize("case", ["plain", "host_budgets", "global_ranks"])
+def test_schedule_partitions_input_in_its_column_order(spark, case):
+    """scheduled and deferred are the two filters of tag_schedule's
+    frame: both keep the input's column order, their counts add up to
+    the input's, and they share no row."""
+    f = _frontier(spark, n=200, hosts=4)
+    kwargs = {
+        "plain": {"budget_per_host": 5},
+        "host_budgets": {
+            "budget_per_host": 5,
+            "host_budgets": spark.createDataFrame(
+                [("h0.x", 2), ("h1.x", 9)], "host string, budget int"
+            ),
+        },
+        "global_ranks": {
+            "budget_per_host": 5,
+            "global_budget": 8,
+            "host_ranks": _ranks(spark, hosts=4),
+        },
+    }[case]
+    assert tag_schedule(f, **kwargs).columns == [*f.columns, "scheduled"]
+    sched, deferred = schedule(f, **kwargs)
+    assert sched.columns == deferred.columns == f.columns
+    n_sched, n_deferred = sched.count(), deferred.count()
+    assert n_sched > 0 and n_deferred > 0
+    assert n_sched + n_deferred == f.count()
     assert sched.join(deferred, "url_norm", "inner").count() == 0
 
 
