@@ -158,7 +158,8 @@ class SnapshotStore:
         lineage record, O(partitions)/iter) stay. Single maintenance
         writer, no concurrent crawl. Returns the new horizon.
         """
-        assert keep_last >= 1
+        if keep_last < 1:  # keeping none leaves no frontier to resume from
+            raise ValueError(f"keep_last={keep_last}: must keep at least 1 snapshot")
         m = self._manifest()
         if m["iter"] is None:
             return 0

@@ -82,6 +82,9 @@ Scale notes (100 TB / 10^10 frontier):
   durably through plans/checkpoint.SnapshotStore for resume: each
   commit writes new data dirs and atomically replaces one manifest
   that every read follows.
+* the loop has one entry: crawl()'s seeds are cut once, as the first
+  frontier and seen set; resume() cuts a snapshot's frontier, seen set
+  and download state as committed and re-enters at its superstep.
 * each superstep's index join is materialized once, as a narrow
   checkpoint (depth, path, links, doc urls, partition id; plus the
   live rows' own checkpoint); candidates, the download branch and the
@@ -110,6 +113,9 @@ from ..operators import dedup as dedup_ops
 from ..operators import download_log
 from ..operators.extract import extract_stage
 from ..operators.politeness import tag_schedule
+from ..operators.redirects import resolve_redirects
+from ..operators.robots import delay_budgets, filter_allowed, host_crawl_delays, robots_rules
+from ..operators.sitemaps import sitemap_seeds
 from .checkpoint import SnapshotStore
 
 # P1 normalization and host extraction in the loop are pure Catalyst
@@ -132,7 +138,6 @@ class CrawlConfig:
     # host_ranks to activate rank-aware ordering (north_rule priority
     # queue: crawl-depth + host-rank)
     global_budget: int | None = None
-    max_retries: int = MAX_RETRIES  # config/config.go:34
     checkpoint_dir: str | None = None
     # override the O1 coordinator: 'fast' | 'slow' routes every page
     # through one tier (the reference exposes the same knob via its
@@ -345,13 +350,26 @@ def crawl(
     cfg: CrawlConfig | None = None,
     url_col: str = "url",
     html_col: str = "html",
-    initial_seen: DataFrame | None = None,
-    start_iter: int = 0,
     host_ranks: DataFrame | None = None,
-    initial_downloads: DataFrame | None = None,
     redirects: DataFrame | None = None,
 ) -> CrawlResult:
+    """Crawl ``pages`` breadth-first from ``seeds(url, depth)``, plus the
+    sitemaps' URLs and minus what robots disallows when ``cfg`` asks: the
+    first frontier and seen set (iter 0), committed as superstep 0 with a
+    ``checkpoint_dir``. Runs until the frontier is empty or
+    ``max_iterations`` supersteps have run; returns the seen set, the
+    finalized download log and one metrics record per superstep."""
     cfg = cfg or CrawlConfig()
+    return _crawl(spark, pages, cfg, url_col, html_col, host_ranks, redirects, seeds=seeds)
+
+
+def _crawl(
+    spark: SparkSession, pages: DataFrame, cfg: CrawlConfig, url_col: str,
+    html_col: str, host_ranks: DataFrame | None, redirects: DataFrame | None,
+    seeds: DataFrame | None = None, as_of: int = 0,
+) -> CrawlResult:
+    """The loop's one entry: a fresh crawl from ``seeds``, or, without
+    them, a resume from the snapshot committed at superstep ``as_of``."""
     store = SnapshotStore(cfg.checkpoint_dir) if cfg.checkpoint_dir else None
 
     def path_of(url, size):
@@ -385,13 +403,6 @@ def crawl(
         robots_df = None
         host_budgets = None
         if cfg.respect_robots:
-            from ..operators.robots import (
-                delay_budgets,
-                filter_allowed,
-                host_crawl_delays,
-                robots_rules,
-            )
-
             robots_df = robots_rules(corpus).localCheckpoint(eager=True)
             if cfg.crawl_delay_window_s is not None:
                 # robots Crawl-delay → per-host politeness budget for each
@@ -411,8 +422,6 @@ def crawl(
         # Seeds are taken as given (they name entry points, not responses).
         redirect_map = None
         if redirects is not None:
-            from ..operators.redirects import resolve_redirects
-
             # cut the input's lineage first: the resolver's doubling tree
             # references the edge table O(2^rounds) times, and each leaf
             # would otherwise replay the caller's full upstream plan
@@ -445,37 +454,12 @@ def crawl(
                 .localCheckpoint(eager=True)
             )
 
-        if cfg.discover_sitemaps:
-            from ..operators.sitemaps import sitemap_seeds as _sm_seeds
-
-            seeds = seeds.select("url", "depth").unionByName(
-                _sm_seeds(corpus).select(
-                    F.col("loc").alias("url"), F.lit(0).alias("depth")
-                )
-            )
-        frontier = _seed_frontier(seeds)
-        if robots_df is not None:
-            frontier = filter_allowed(frontier, robots_df)
         n_rows = F.count(F.lit(1)).alias("n")
         key_bytes = F.sum(F.octet_length("url_norm")).alias("bytes")
         # a frontier row's url_norm + url bytes size the scheduled batch
         # that the fetch joins may broadcast; they ride the first
         # frontier and new cuts (the schedule cut sums its batch's)
         url_bytes = F.sum(F.octet_length("url")).alias("url_bytes")
-        frontier, got = _cut(frontier, "frontier0", None, n_rows, key_bytes, url_bytes)
-        n_frontier, frontier_bytes = got["n"], got["bytes"] + got["url_bytes"]
-        # seen's row count and key bytes ride its first cut; each superstep
-        # adds those of its new rows (new is anti-joined against seen, so
-        # the union adds no duplicate)
-        seen, got = _cut(
-            (
-                initial_seen
-                if initial_seen is not None
-                else frontier.withColumn("iter", F.lit(0))
-            ).select("url_norm", "url", "host", "depth", "iter"),
-            "seen0", None, n_rows, key_bytes,
-        )
-        n_seen, seen_bytes = got["n"], got["bytes"]
         # the session's broadcast limit in bytes (-1 = never broadcast)
         bc_limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
         ncoal = max(4, spark.sparkContext.defaultParallelism)
@@ -488,24 +472,52 @@ def crawl(
             )
             return state, got["n"]
 
-        if initial_downloads is not None:
-            dl, n_pending_dl = cut_downloads(initial_downloads, "dl0")
+        dl, n_pending_dl = spark.createDataFrame([], download_log.LOG_SCHEMA), 0
+        # seen's row count and key bytes ride its first cut; each superstep
+        # adds those of its new rows (new is anti-joined against seen, so
+        # the union adds no duplicate)
+        if seeds is not None:
+            # a fresh crawl: the seeds (with the sitemaps' URLs) are the
+            # first frontier, robots-filtered; seen is that cut at iter 0,
+            # and both are committed as superstep 0
+            if cfg.discover_sitemaps:
+                seeds = seeds.select("url", "depth").unionByName(
+                    sitemap_seeds(corpus).select(
+                        F.col("loc").alias("url"), F.lit(0).alias("depth")
+                    )
+                )
+            frontier = _seed_frontier(seeds)
+            if robots_df is not None:
+                frontier = filter_allowed(frontier, robots_df)
+            frontier, got = _cut(frontier, "frontier0", None, n_rows, key_bytes, url_bytes)
+            seen = frontier.withColumn("iter", F.lit(0))
+            n_seen, seen_bytes = got["n"], got["bytes"]
+            if store:
+                store.write_iter(0, seen, frontier)
         else:
-            dl, n_pending_dl = spark.createDataFrame([], download_log.LOG_SCHEMA), 0
+            # a resume: the snapshot's frontier is already first-writer
+            # rows, robots-filtered when they were new, so it is cut as
+            # read, and so are seen and the download state
+            seen, got = _cut(store.read_seen(spark, as_of), "seen0", None, n_rows, key_bytes)
+            n_seen, seen_bytes = got["n"], got["bytes"]
+            frontier, got = _cut(
+                store.read_frontier(spark, as_of), "frontier0", None,
+                n_rows, key_bytes, url_bytes,
+            )
+            dl0 = download_log.from_tables(
+                store.merged_downloads(spark, as_of), store.read_pending(spark, as_of), as_of
+            )
+            if dl0 is not None:
+                dl, n_pending_dl = cut_downloads(dl0, "dl0")
+        n_frontier, frontier_bytes = got["n"], got["bytes"] + got["url_bytes"]
         metrics: list[dict] = []
-
-        if store and initial_seen is None:
-            # a fresh crawl commits its seeds as superstep 0; a resume
-            # re-enters from a committed snapshot and writes nothing before
-            # its first superstep
-            store.write_iter(0, seen, frontier)
 
         budgeted = (
             cfg.budget_per_host is not None
             or cfg.global_budget is not None
             or host_budgets is not None
         )
-        it = start_iter
+        it = as_of
         # frontier = deferred ∪ new, so an empty frontier is exhaustion with
         # or without a budget
         while it < cfg.max_iterations and n_frontier > 0:
@@ -647,8 +659,6 @@ def crawl(
             else:
                 new = deduped.join(seen_keys, "url_norm", "left_anti")
             if robots_df is not None:
-                from ..operators.robots import filter_allowed
-
                 new = filter_allowed(new, robots_df)
             if cfg.plan_hook is not None:
                 cfg.plan_hook(it, "seen_probe", _physical_str(new))
@@ -677,7 +687,7 @@ def crawl(
                         dl,
                         index.select(F.col("url_norm").alias("dl_norm")),
                         it,
-                        cfg.max_retries,
+                        MAX_RETRIES,
                     ),
                     f"iter{it}_dl",
                 )
@@ -773,7 +783,13 @@ def resume(
     K+1.. deterministically and lands on the same final state as the
     uninterrupted run (tested both ways in tests/test_frontier.py); its
     first commit drops the manifest entries above K and deletes the
-    abandoned timeline's dirs."""
+    abandoned timeline's dirs.
+
+    The loop re-enters with the snapshot's frontier, seen set and
+    download state (closed rows and retry queue) taken as committed.
+    Sitemap seeding and the robots filter of seeds run only on a fresh
+    crawl: a resume assumes the config (and ``host_ranks``,
+    ``redirects``) the snapshot was written with."""
     if not cfg.checkpoint_dir:
         raise ValueError("resume requires cfg.checkpoint_dir")
     store = SnapshotStore(cfg.checkpoint_dir)
@@ -791,29 +807,6 @@ def resume(
             )
         last = as_of
 
-    seen0 = store.read_seen(spark, last)
-    frontier0 = store.read_frontier(spark, last)
-    dl0 = download_log.from_tables(
-        store.merged_downloads(spark, last), store.read_pending(spark, last), last
-    )
-
-    # re-enter the loop with the snapshot's FULL state injected — seen
-    # set, frontier and the download state (merged closed rows AND the
-    # retry queue): the continuation anti-joins against everything
-    # already visited/closed and keeps retrying what was in flight, so
-    # the final state (including downloads) is identical to an
-    # uninterrupted run (tested in tests/test_frontier.py::
-    # test_resume_identical).
-    return crawl(
-        spark,
-        pages,
-        frontier0.select("url", "depth"),
-        cfg,
-        url_col=url_col,
-        html_col=html_col,
-        initial_seen=seen0,
-        start_iter=last,
-        initial_downloads=dl0,
-        redirects=redirects,
-        host_ranks=host_ranks,
+    return _crawl(
+        spark, pages, cfg, url_col, html_col, host_ranks, redirects, as_of=last
     )

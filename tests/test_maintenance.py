@@ -312,6 +312,21 @@ def _base_store(spark, root):
     return store
 
 
+def test_expire_keep_zero_raises(spark, tmp_path):
+    """expire_snapshots(0) would move the horizon past the last commit
+    and drop every frontier: it is a caller error, raised (also under
+    ``python -O``) before the manifest is read or written."""
+    root = str(tmp_path)
+    store = _base_store(spark, root)
+    meta = os.path.join(root, "_meta.json")
+    with open(meta, "rb") as f:
+        before = f.read()
+    with pytest.raises(ValueError, match="keep_last"):
+        store.expire_snapshots(0)
+    with open(meta, "rb") as f:
+        assert f.read() == before
+
+
 def test_interrupted_compaction_keeps_seen(spark, tmp_path, monkeypatch):
     """Defect 4: rewrite_data_files interrupted at any file mutation
     (e.g. after it set the horizon delta aside) must not lose seen rows

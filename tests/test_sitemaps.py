@@ -1,14 +1,20 @@
 """Sitemap ingestion (operators/sitemaps.py — engine-native; the
 reference discovers by link-walking only)."""
 
+import tempfile
+
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.sitemaps import (
     sitemap_entries,
     sitemap_index_children,
     sitemap_seeds,
 )
+from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans import (
+    frontier as fr,
+)
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.plans.frontier import (
     CrawlConfig,
     crawl,
+    resume,
 )
 
 URLSET = """<?xml version="1.0"?>
@@ -98,3 +104,69 @@ def test_crawl_discovers_sitemap_urls(spark):
     assert seen["https://s.example/island"] == 0  # seeded, not walked
     assert "https://s.example/cove" in seen  # BFS continues past it
     assert "https://s.example/linked" in seen
+
+
+def test_resume_takes_the_committed_frontier(spark, monkeypatch):
+    """A resume enters the loop with the committed frontier as it is:
+    the sitemap's URLs are seeds of the fresh crawl only. Re-merging
+    them at depth 0 would re-schedule the already-crawled island and,
+    at one page per host and superstep, push the rest of the crawl one
+    superstep later. crawl(2) + resume equals the uninterrupted crawl
+    row for row, and the page robots.txt disallows stays out of both.
+    seen's first state is the fresh crawl's frontier cut (no seen0
+    cut of its own); a resume cuts the committed seen set."""
+    rows = [
+        ("https://s.example/robots.txt", "User-agent: *\nDisallow: /private/\n"),
+        (
+            "https://s.example/sitemap.xml",
+            "<urlset><url><loc>https://s.example/island</loc></url></urlset>",
+        ),
+        (
+            "https://s.example/",
+            '<html><body><a href="/l1">a</a><a href="/private/x">p</a></body></html>',
+        ),
+        ("https://s.example/l1", '<html><body><a href="/l2">b</a></body></html>'),
+        ("https://s.example/l2", '<html><body><a href="/l3">c</a></body></html>'),
+        ("https://s.example/l3", "<html><body>end</body></html>"),
+        ("https://s.example/island", '<html><body><a href="/cove">y</a></body></html>'),
+        ("https://s.example/cove", "<html><body>z</body></html>"),
+        ("https://s.example/private/x", "<html><body>secret</body></html>"),
+    ]
+    pages = spark.createDataFrame(rows, "url string, html string")
+    seeds = spark.createDataFrame([("https://s.example/", 0)], "url string, depth int")
+    cfg = {"discover_sitemaps": True, "respect_robots": True, "budget_per_host": 1}
+
+    names = []
+    cut = fr._cut
+
+    def recording_cut(df, name, *args):
+        names.append(name)
+        return cut(df, name, *args)
+
+    monkeypatch.setattr(fr, "_cut", recording_cut)
+
+    def seen_rows(res):
+        cols = ("url_norm", "url", "host", "depth", "iter")
+        return sorted(tuple(r) for r in res.seen.select(*cols).collect())
+
+    with tempfile.TemporaryDirectory() as ck:
+        full_run = crawl(
+            spark, pages, seeds,
+            CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=ck + "/full"),
+        )
+        assert "seen0" not in names
+        crawl(
+            spark, pages, seeds,
+            CrawlConfig(**cfg, max_iterations=2, checkpoint_dir=ck + "/part"),
+        )
+        names.clear()
+        res = resume(
+            spark, pages, CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=ck + "/part")
+        )
+        assert names.count("seen0") == 1
+        got = seen_rows(res)
+    want = seen_rows(full_run)
+    assert "https://s.example/l3" in {r[0] for r in want}
+    assert "https://s.example/private/x" not in {r[0] for r in want + got}
+    assert res.iterations == full_run.iterations
+    assert got == want
