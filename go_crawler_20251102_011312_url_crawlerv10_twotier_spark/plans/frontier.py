@@ -473,9 +473,9 @@ def _crawl(
             return state, got["n"]
 
         dl, n_pending_dl = spark.createDataFrame([], download_log.LOG_SCHEMA), 0
-        # seen's row count and key bytes ride its first cut; each superstep
-        # adds those of its new rows (new is anti-joined against seen, so
-        # the union adds no duplicate)
+        # seen's row count and key bytes ride its first cut (frontier0's on
+        # a fresh crawl); each superstep adds those of its new rows (new is
+        # anti-joined against seen, so the union adds no duplicate)
         if seeds is not None:
             # a fresh crawl: the seeds (with the sitemaps' URLs) are the
             # first frontier, robots-filtered; seen is that cut at iter 0,

@@ -1,8 +1,6 @@
 """Sitemap ingestion (operators/sitemaps.py — engine-native; the
 reference discovers by link-walking only)."""
 
-import tempfile
-
 from go_crawler_20251102_011312_url_crawlerv10_twotier_spark.operators.sitemaps import (
     sitemap_entries,
     sitemap_index_children,
@@ -106,7 +104,7 @@ def test_crawl_discovers_sitemap_urls(spark):
     assert "https://s.example/linked" in seen
 
 
-def test_resume_takes_the_committed_frontier(spark, monkeypatch):
+def test_resume_takes_the_committed_frontier(spark, monkeypatch, tmp_path):
     """A resume enters the loop with the committed frontier as it is:
     the sitemap's URLs are seeds of the fresh crawl only. Re-merging
     them at depth 0 would re-schedule the already-crawled island and,
@@ -149,22 +147,17 @@ def test_resume_takes_the_committed_frontier(spark, monkeypatch):
         cols = ("url_norm", "url", "host", "depth", "iter")
         return sorted(tuple(r) for r in res.seen.select(*cols).collect())
 
-    with tempfile.TemporaryDirectory() as ck:
-        full_run = crawl(
-            spark, pages, seeds,
-            CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=ck + "/full"),
-        )
-        assert "seen0" not in names
-        crawl(
-            spark, pages, seeds,
-            CrawlConfig(**cfg, max_iterations=2, checkpoint_dir=ck + "/part"),
-        )
-        names.clear()
-        res = resume(
-            spark, pages, CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=ck + "/part")
-        )
-        assert names.count("seen0") == 1
-        got = seen_rows(res)
+    full_run = crawl(
+        spark, pages, seeds,
+        CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=str(tmp_path / "full")),
+    )
+    assert "seen0" not in names
+    part = str(tmp_path / "part")
+    crawl(spark, pages, seeds, CrawlConfig(**cfg, max_iterations=2, checkpoint_dir=part))
+    names.clear()
+    res = resume(spark, pages, CrawlConfig(**cfg, max_iterations=8, checkpoint_dir=part))
+    assert names.count("seen0") == 1
+    got = seen_rows(res)
     want = seen_rows(full_run)
     assert "https://s.example/l3" in {r[0] for r in want}
     assert "https://s.example/private/x" not in {r[0] for r in want + got}
